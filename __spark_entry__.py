@@ -607,11 +607,12 @@ def q_containment_pairs(spark, sf_dir):
 
 def q_shingle_stats(spark, sf_dir):
     """F14 oracle: per-distinct-content shingle-set cardinality from the
-    real signature stage (with_shingles: 5-token-window xxhash64 sets,
-    9-char-gram fallback under 5 tokens). DuckDB rebuilds the identical
-    windows as strings — token windows joined by space are injective
-    (tokens cannot contain spaces), so count-distinct matches exactly
-    unless the xxhash64 window hashing collides (none on this corpus)."""
+    real signature stage (signature_table: 5-token windows as rolling
+    positional hashes of per-token xxhash64, 9-char-gram xxhash64
+    fallback under 5 tokens). DuckDB rebuilds the identical windows as
+    strings — token windows joined by space are injective (tokens
+    cannot contain spaces), so count-distinct matches exactly unless
+    the token or window hashing collides (none on this corpus)."""
     files = _files(spark, sf_dir)
     sigs = _sigs(files)
     return sigs.join(files.select("file_id", "sha256"), "file_id").select(

@@ -97,6 +97,19 @@ def test_cc_probe_cadence_deep_graph_stacks(spark):
     assert stats["probes"] == 3 + (stats["rounds"] - 3 + 1) // 2
 
 
+def test_cc_stats_describe_a_failed_call(spark):
+    """A call that does not converge still reports its own rounds and
+    probes, not the previous call's."""
+    from uncp_spark.operators import components as cc
+
+    _run_cc(spark, [(0, 1), (0, 2)])
+    assert cc.LAST_RUN_STATS["rounds"] == 2
+    df = spark.createDataFrame([(i, i + 1) for i in range(300)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=1)
+    assert cc.LAST_RUN_STATS == {"rounds": 1, "probes": 1}
+
+
 def test_label_all_singletons(spark):
     files = spark.createDataFrame([(1,), (2,), (3,)], "file_id long")
     labels = connected_components(spark.createDataFrame([(1, 2)], "src long, dst long"))

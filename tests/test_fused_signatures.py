@@ -1,12 +1,9 @@
-"""Fused signature path (with_token_hashes → one pandas UDF) vs the
-expression path (with_shingles → signatures UDF).
-
-Shingle id VALUES legitimately differ (splitmix-rolled vs
-xxhash64-of-slice); everything consumers rely on must agree:
-  - n_shingles (count of distinct k-token windows) identical
-  - char-gram fallback rows produce the IDENTICAL shingle set
-  - simhash identical (same token_hashes, same kernel)
-  - est-Jaccard from minhash tracks true shingle Jaccard both ways
+"""The signature stage (signature_table: with_token_hashes → one fused
+pandas UDF), checked against independent Python oracles:
+  - n_shingles = number of distinct k-token windows of the normalized text
+  - char-gram fallback rows carry exactly their distinct char-gram hashes
+  - simhash = the SimHash kernel over the row's token hashes
+  - est-Jaccard from minhash tracks true shingle Jaccard
 """
 
 from __future__ import annotations
@@ -20,9 +17,9 @@ from uncp_spark.functions.kernels import (
     est_jaccard,
     shingle_ids_batch,
     shingle_weights,
+    simhash_batch,
 )
-from uncp_spark.operators.shingle import with_shingles, with_token_hashes
-from uncp_spark.operators.signatures import with_signatures, with_signatures_fused
+from uncp_spark.operators.signatures import signature_table
 
 CFG = SimilarityConfig()
 
@@ -42,43 +39,45 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "file_id long, content string")
 
 
-def _both(spark):
-    df = _corpus(spark)
-    expr = with_signatures(with_shingles(df, CFG), CFG).select(
-        "file_id", "shingles", "n_shingles", "minhash", "simhash"
+def _sigs(spark):
+    return signature_table(_corpus(spark), CFG).select(
+        "file_id", "norm_text", "token_hashes", "char_hashes",
+        "shingles", "n_shingles", "minhash", "simhash",
     ).toPandas().set_index("file_id").sort_index()
-    fused = with_signatures_fused(with_token_hashes(df, CFG), CFG).select(
-        "file_id", "shingles", "n_shingles", "minhash", "simhash"
-    ).toPandas().set_index("file_id").sort_index()
-    return expr, fused
 
 
 def test_counts_simhash_and_char_fallback_agree(spark):
-    expr, fused = _both(spark)
-    assert list(expr["n_shingles"]) == list(fused["n_shingles"])
-    assert list(expr["simhash"]) == list(fused["simhash"])
-    # char-fallback rows (< k tokens) use the same char-gram hashes →
-    # identical shingle sets, not just identical counts
-    for fid in (4, 5):
-        assert sorted(expr.loc[fid, "shingles"]) == sorted(fused.loc[fid, "shingles"])
+    k = CFG.shingle_k
+    for fid, r in _sigs(spark).iterrows():
+        assert r["n_shingles"] == len(r["shingles"])
+        th = np.asarray(r["token_hashes"], dtype=np.int64)
+        assert r["simhash"] == simhash_batch([th])[0]
+        toks = r["norm_text"].split(" ")
+        if len(toks) >= k:
+            windows = {tuple(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+            assert r["n_shingles"] == len(windows), fid
+            assert r["char_hashes"] is None
+        else:
+            # char-fallback rows (< k tokens): the set of char-gram hashes
+            assert fid in (4, 5)
+            assert list(r["shingles"]) == sorted(set(r["char_hashes"]))
 
 
-def test_est_jaccard_tracks_truth_both_paths(spark):
-    expr, fused = _both(spark)
-    for frame in (expr, fused):
-        s1 = set(frame.loc[1, "shingles"])
-        s2 = set(frame.loc[2, "shingles"])
-        true_j = len(s1 & s2) / len(s1 | s2)
-        est = est_jaccard(
-            np.asarray(frame.loc[1, "minhash"]), np.asarray(frame.loc[2, "minhash"])
-        )
-        assert est == pytest.approx(true_j, abs=0.15)
-        # exact dup → identical signature
-        assert list(frame.loc[1, "minhash"]) == list(frame.loc[6, "minhash"])
-        # unrelated docs → near-zero estimate
-        assert est_jaccard(
-            np.asarray(frame.loc[1, "minhash"]), np.asarray(frame.loc[3, "minhash"])
-        ) < 0.1
+def test_est_jaccard_tracks_truth(spark):
+    frame = _sigs(spark)
+    s1 = set(frame.loc[1, "shingles"])
+    s2 = set(frame.loc[2, "shingles"])
+    true_j = len(s1 & s2) / len(s1 | s2)
+    est = est_jaccard(
+        np.asarray(frame.loc[1, "minhash"]), np.asarray(frame.loc[2, "minhash"])
+    )
+    assert est == pytest.approx(true_j, abs=0.15)
+    # exact dup → identical signature
+    assert list(frame.loc[1, "minhash"]) == list(frame.loc[6, "minhash"])
+    # unrelated docs → near-zero estimate
+    assert est_jaccard(
+        np.asarray(frame.loc[1, "minhash"]), np.asarray(frame.loc[3, "minhash"])
+    ) < 0.1
 
 
 def test_shingle_ids_batch_kernel():

@@ -15,8 +15,8 @@ import pytest
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.functions.kernels import (
     est_jaccard,
-    minhash_batch,
     minhash_params,
+    oph_minhash_batch,
     simhash_batch,
 )
 from uncp_spark.functions.suffix import SuffixIndex, suffix_array
@@ -31,57 +31,63 @@ def _rand_set(rng: random.Random, n: int) -> np.ndarray:
 
 
 def test_minhash_deterministic():
+    """minhash_params is a pure function of the config, so signatures
+    computed from separately drawn params agree; another seed differs."""
     a, b = minhash_params(CFG)
     a2, b2 = minhash_params(CFG)
     assert np.array_equal(a, a2) and np.array_equal(b, b2)
     rng = random.Random(7)
     s = _rand_set(rng, 100)
-    sig1 = minhash_batch([s], a, b, CFG.prime)
-    sig2 = minhash_batch([s.copy()], a, b, CFG.prime)
+    sig1 = oph_minhash_batch([s], a, b, CFG.prime, CFG.num_perm)
+    sig2 = oph_minhash_batch([s.copy()], a2, b2, CFG.prime, CFG.num_perm)
     assert np.array_equal(sig1, sig2)
-    assert sig1.shape == (1, CFG.num_perm)
-    assert (sig1 < CFG.prime).all() and (sig1 >= 0).all()
+    a3, b3 = minhash_params(SimilarityConfig(seed=CFG.seed + 1))
+    sig3 = oph_minhash_batch([s], a3, b3, CFG.prime, CFG.num_perm)
+    assert not np.array_equal(sig1, sig3)
 
 
 def test_minhash_identical_sets_identical_sigs():
     a, b = minhash_params(CFG)
     rng = random.Random(3)
     s = _rand_set(rng, 200)
-    sigs = minhash_batch([s, np.random.default_rng(0).permutation(s)], a, b, CFG.prime)
+    sigs = oph_minhash_batch(
+        [s, np.random.default_rng(0).permutation(s)], a, b, CFG.prime, CFG.num_perm
+    )
     assert np.array_equal(sigs[0], sigs[1])  # order-invariant (set semantics)
 
 
 def test_minhash_empty_set_sentinel():
     a, b = minhash_params(CFG)
-    sigs = minhash_batch([np.empty(0, np.int64)], a, b, CFG.prime)
-    assert (sigs == CFG.prime).all()
+    sigs = oph_minhash_batch([np.empty(0, np.int64)], a, b, CFG.prime, CFG.num_perm)
+    assert (sigs == CFG.prime * CFG.num_perm).all()
 
 
 def test_minhash_estimates_jaccard():
-    """Signature-estimated Jaccard tracks true Jaccard within MinHash
-    std-error (~1/sqrt(128) ≈ 0.09) across overlap levels."""
+    """Sets smaller than num_perm leave most buckets to densification;
+    the estimate still tracks true Jaccard within ~1/sqrt(128) std-error
+    across overlap levels."""
     a, b = minhash_params(CFG)
     rng = random.Random(11)
-    base = _rand_set(rng, 400)
+    base = _rand_set(rng, 100)
     for frac in (0.3, 0.5, 0.8, 0.95):
         keep = int(len(base) * frac)
-        other = np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)])
-        other = np.unique(other)
+        other = np.unique(np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)]))
         true_j = len(np.intersect1d(base, other)) / len(np.union1d(base, other))
-        sigs = minhash_batch([base, other], a, b, CFG.prime)
+        sigs = oph_minhash_batch([base, other], a, b, CFG.prime, CFG.num_perm)
         est = est_jaccard(sigs[0], sigs[1])
         assert abs(est - true_j) < 0.14, (frac, true_j, est)
 
 
 def test_minhash_batch_matches_single_rows():
-    """Batch layout (concatenate + reduceat) must equal row-at-a-time."""
+    """Batch layout must equal row-at-a-time for small rows (fewer
+    shingles than buckets, so densification borrows in every row)."""
     a, b = minhash_params(CFG)
     rng = random.Random(5)
     sets = [_rand_set(rng, rng.randint(1, 60)) for _ in range(9)]
     sets.insert(3, np.empty(0, np.int64))  # empty row mid-batch
-    batched = minhash_batch(sets, a, b, CFG.prime)
+    batched = oph_minhash_batch(sets, a, b, CFG.prime, CFG.num_perm)
     for i, s in enumerate(sets):
-        single = minhash_batch([s], a, b, CFG.prime)
+        single = oph_minhash_batch([s], a, b, CFG.prime, CFG.num_perm)
         assert np.array_equal(batched[i], single[0]), i
 
 
@@ -162,22 +168,25 @@ def test_simhash_matches_slow_reference():
 
 
 def test_minhash_mersenne_reduction_matches_modulo():
-    """The shift-add Mersenne reduction must equal (a*h+b) % p exactly."""
+    """The shift-add Mersenne reduction must equal (a*h+b) % p exactly:
+    a one-element set's value in its own bucket (h mod num_perm) is the
+    single mixed hash, undensified."""
     a, b = minhash_params(CFG)
     rng = random.Random(101)
-    s = _rand_set(rng, 500)
-    sig = minhash_batch([s], a, b, CFG.prime)[0]
-    h = np.mod(s.astype(np.int64), np.int64(CFG.prime)).astype(np.uint64)
-    ref = np.array(
-        [int(((a[i].astype(object) * h.astype(object) + int(b[i])) % CFG.prime).min())
-         for i in range(CFG.num_perm)],
-        dtype=np.int64,
+    p = CFG.prime
+    vals = [rng.randint(-(2**63), 2**63 - 1) for _ in range(500)]
+    vals += [0, 1, p - 1, p, p + 1, 2 * p, -1, -p, 2**63 - 1, -(2**63)]
+    # the h whose mixed value is 0: exercises the x == p fix-up
+    vals.append(-int(b[0]) * pow(int(a[0]), -1, p) % p)
+    sigs = oph_minhash_batch(
+        [np.array([v], dtype=np.int64) for v in vals], a, b, p, CFG.num_perm
     )
-    assert np.array_equal(sig, ref)
+    for row, v in zip(sigs, vals):
+        h = v % p  # Python % is non-negative for p > 0, like np.mod
+        assert row[h % CFG.num_perm] == (int(a[0]) * h + int(b[0])) % p, v
 
 
 def test_oph_deterministic_and_shapes():
-    from uncp_spark.functions.kernels import oph_minhash_batch
     a, b = minhash_params(CFG)
     rng = random.Random(7)
     s = _rand_set(rng, 300)
@@ -190,7 +199,6 @@ def test_oph_deterministic_and_shapes():
 
 
 def test_oph_batch_matches_single_rows():
-    from uncp_spark.functions.kernels import oph_minhash_batch
     a, b = minhash_params(CFG)
     rng = random.Random(5)
     sets = [_rand_set(rng, rng.randint(1, 400)) for _ in range(9)]
@@ -203,11 +211,10 @@ def test_oph_batch_matches_single_rows():
 
 
 def test_oph_estimates_jaccard():
-    from uncp_spark.functions.kernels import oph_minhash_batch
     a, b = minhash_params(CFG)
     rng = random.Random(11)
     base = _rand_set(rng, 400)
-    for frac in (0.5, 0.8, 0.95):
+    for frac in (0.3, 0.5, 0.8, 0.95):
         keep = int(len(base) * frac)
         other = np.unique(np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)]))
         true_j = len(np.intersect1d(base, other)) / len(np.union1d(base, other))

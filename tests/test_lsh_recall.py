@@ -14,9 +14,7 @@ import pytest
 from uncp_spark.operators.exact import exact_representatives
 from uncp_spark.operators.ingest import ingest
 from uncp_spark.operators.lsh import band_keys, candidate_pairs
-from uncp_spark.operators.minhash import with_minhash
-from uncp_spark.operators.shingle import with_shingles
-from uncp_spark.operators.simhash import with_simhash
+from uncp_spark.operators.signatures import signature_table
 from uncp_spark.operators.verify import accept_edges, score_pairs
 
 
@@ -24,9 +22,10 @@ from uncp_spark.operators.verify import accept_edges, score_pairs
 def sigs(spark, cfg, repos_df):
     files = ingest(repos_df)
     reps = exact_representatives(files)
+    # bottomk kept: the verify stage's sketch screen runs in the loop
     out = (
-        with_simhash(with_minhash(with_shingles(reps, cfg), cfg))
-        .select("file_id", "minhash", "simhash", "shingles")
+        signature_table(reps, cfg)
+        .select("file_id", "minhash", "simhash", "shingles", "bottomk")
         .cache()
     )
     out.count()
@@ -78,11 +77,15 @@ def test_accepted_edges_respect_thresholds(spark, cfg, sigs):
     pairs, _ = candidate_pairs(sigs, cfg)
     scored = score_pairs(pairs, sigs, cfg)
     edges = accept_edges(scored, cfg)
-    bad = edges.join(scored, ["src", "dst"]).filter(
-        (F.col("est_jaccard") < cfg.jaccard_threshold)
-        & (F.col("hamming") > cfg.hamming_threshold)
-        & (F.col("containment") < cfg.containment_threshold)
+    # accept_edges' full rule: the exact Jaccard (residual phase) counts
+    # too; NULL containment/jaccard means "not evaluated", never "passed"
+    ok = (
+        (F.col("est_jaccard") >= cfg.jaccard_threshold)
+        | (F.col("hamming") <= cfg.hamming_threshold)
+        | (F.coalesce("containment", F.lit(0.0)) >= cfg.containment_threshold)
+        | (F.coalesce("jaccard", F.lit(0.0)) >= cfg.jaccard_threshold)
     )
+    bad = edges.join(scored, ["src", "dst"]).filter(~ok)
     assert bad.count() == 0
 
 
@@ -93,7 +96,7 @@ def test_hot_band_cap(spark, cfg):
     # 12 near-identical variants (distinct content, same shingle mass)
     rows = [(i, base + f" tail{i}") for i in range(12)]
     df = spark.createDataFrame(rows, "file_id long, content string")
-    variant_sigs = with_simhash(with_minhash(with_shingles(df, cfg), cfg))
+    variant_sigs = signature_table(df, cfg)
     small_cap = type(cfg)(hot_band_cap=5)
     pairs_capped, hot = candidate_pairs(variant_sigs, small_cap)
     assert hot.count() > 0

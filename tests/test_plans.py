@@ -85,14 +85,11 @@ def test_lsh_pipeline_has_no_cartesian_product(spark):
     from uncp_spark.operators.exact import exact_representatives
     from uncp_spark.operators.ingest import ingest
     from uncp_spark.operators.lsh import candidate_pairs
-    from uncp_spark.operators.shingle import with_shingles
-    from uncp_spark.operators.signatures import with_signatures
+    from uncp_spark.operators.signatures import signature_table
     from uncp_spark.operators.verify import accept_edges, score_pairs
 
     files = ingest(repos_from_documents(spark, SF_DIR))
-    sigs = with_signatures(
-        with_shingles(exact_representatives(files), CFG), CFG
-    )
+    sigs = signature_table(exact_representatives(files), CFG)
     pairs, _hot = candidate_pairs(sigs, CFG)
     edges = accept_edges(score_pairs(pairs, sigs, CFG), CFG)
     plan = _fmt(edges)

@@ -5,14 +5,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from uncp_spark.operators.ingest import ingest
-from uncp_spark.operators.minhash import with_minhash
-from uncp_spark.operators.shingle import with_shingles
-from uncp_spark.operators.simhash import with_simhash
+from uncp_spark.operators.signatures import signature_table
 
 
 def _sigs(spark, cfg, rows):
     df = spark.createDataFrame(rows, "file_id long, content string")
-    return with_simhash(with_minhash(with_shingles(df, cfg), cfg))
+    return signature_table(df, cfg)
 
 
 def test_shingle_counts(spark, cfg):
@@ -45,7 +43,7 @@ def test_signature_determinism_across_runs(spark, cfg):
 
 def test_signature_length_and_range(spark, cfg, repos_df):
     files = ingest(repos_df).limit(50)
-    sigs = with_minhash(with_shingles(files, cfg), cfg)
+    sigs = signature_table(files, cfg, include_shingles=False)
     # OPH densified values are bounded by num_perm * prime (offset coding)
     max_val = cfg.prime * cfg.num_perm
     bad = sigs.filter(
@@ -53,21 +51,3 @@ def test_signature_length_and_range(spark, cfg, repos_df):
         | F.exists("minhash", lambda v: (v < 0) | (v > max_val))
     )
     assert bad.count() == 0
-
-
-def test_fused_signatures_match_separate(spark, cfg, repos_df):
-    """with_signatures (one UDF pass) must be bit-identical to
-    with_minhash + with_simhash."""
-    from uncp_spark.operators.signatures import with_signatures
-
-    files = spark.createDataFrame(
-        [(i, f"text body {' '.join(f'w{j}' for j in range(i + 3))}")
-         for i in range(20)],
-        "file_id long, content string",
-    )
-    sh = with_shingles(files, cfg)
-    fused = {r["file_id"]: (r["minhash"], r["simhash"])
-             for r in with_signatures(sh, cfg).collect()}
-    sep = {r["file_id"]: (r["minhash"], r["simhash"])
-           for r in with_simhash(with_minhash(sh, cfg)).collect()}
-    assert fused == sep

@@ -11,8 +11,9 @@ Pipeline (SURVEY.md §7.1):
     repos(repo, path, commit, lang, content)
       → ingest (sha256, size, depth)            [exact tier key]
       → exact clusters (groupBy sha256)         [uncp IdenticalHashes]
-      → normalize + shingle (JVM-side)          [xxhash64 k-gram shingles]
-      → MinHash(128) + SimHash64 (pandas UDFs)
+      → normalize + per-token xxhash64 (JVM-side)
+      → k-token shingle ids + one-permutation MinHash(128) + SimHash64
+        + bottom-k sketch                       [one fused pandas UDF]
       → LSH banding self-join → candidate pairs [skew-capped hot buckets]
       → verify (est. Jaccard / Hamming / containment) → edges
       → connected components (large-star/small-star) → clusters

@@ -34,27 +34,14 @@ class SimilarityConfig:
     # --- shingling (F14) ---
     shingle_k: int = 5          # tokens per shingle
     char_shingle_k: int = 9     # char k-grams for files shorter than shingle_k tokens
-    # "fused": k-token windowing + distinct + MinHash + SimHash in one
-    #          numpy pass (operators/signatures.with_signatures_fused);
-    #          the JVM stops at per-token xxhash64. ~2-3x faster than
-    #          "expr" — the per-window slice/hash/distinct expressions
-    #          were the measured hot spot of the signature stage.
-    # "expr":  everything up to the shingle set as JVM expressions
-    #          (operators/shingle.with_shingles). Same n_shingles, same
-    #          set semantics; shingle id VALUES differ between impls.
-    shingle_impl: str = "fused"
 
     # --- MinHash (F15) ---
+    # one-permutation hashing with rotation densification
+    # (kernels.oph_minhash_batch): num_perm buckets, one pass over the
+    # shingles, so signature cost is O(shingles), not O(num_perm × shingles)
     num_perm: int = 128
     seed: int = 42
     prime: int = MINHASH_PRIME
-    # "oph": one-permutation hashing with rotation densification
-    #        (Li/Owen/Zhang 2012; Shrivastava/Li 2014) — one pass over the
-    #        shingles instead of 128, so signature cost is O(shingles),
-    #        not O(num_perm × shingles). The estimator (fraction of equal
-    #        positions) is unbiased either way; LSH banding is identical.
-    # "perm": the classic (a·x+b) mod p per-permutation construction.
-    minhash_impl: str = "oph"
 
     # --- LSH ---
     bands: int = 32

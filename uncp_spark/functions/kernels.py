@@ -1,10 +1,11 @@
 """Vectorized numpy kernels for MinHash (F15) and SimHash (F16).
 
 Pure functions over batches of shingle-hash arrays — unit-testable
-without Spark, wrapped by pandas UDFs in operators/minhash.py and
-operators/simhash.py. Replaces the reference's designed-but-stubbed
-similarity providers (src/similarity.rs:1-7, DESIGN.md:240-258) with
-the standard MinHash/SimHash constructions (Broder 1997; Charikar 2002).
+without Spark, called once per Arrow batch by the signature-stage
+pandas UDF in operators/signatures.py. Replaces the reference's
+designed-but-stubbed similarity providers (src/similarity.rs:1-7,
+DESIGN.md:240-258) with the standard MinHash/SimHash constructions
+(Broder 1997; Charikar 2002).
 
 All arithmetic stays in fixed-width integers: shingle hashes are reduced
 mod p = 2^31 - 1, permutation params a, b < p, so a*h + b < 2^62 fits
@@ -17,10 +18,6 @@ import numpy as np
 
 from uncp_spark.config import SimilarityConfig
 
-# cap on elements of the (perm_chunk x total_shingles) work matrix —
-# sized so each temporary stays ~16 MB: large enough to amortize ufunc
-# overhead, small enough that a worker's first-touch warmup is cheap
-_CHUNK_ELEMS = 2_000_000
 # cap on tokens unpacked to the (tokens x 64) bit matrix per simhash chunk
 _SIMHASH_CHUNK_TOKENS = 500_000
 
@@ -35,49 +32,6 @@ def minhash_params(cfg: SimilarityConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_batch(
-    shingle_arrays: list[np.ndarray],
-    a: np.ndarray,
-    b: np.ndarray,
-    prime: int,
-) -> np.ndarray:
-    """MinHash signatures for a batch of shingle-hash sets.
-
-    Returns int64 array of shape (n_rows, num_perm). Empty sets get the
-    sentinel signature [prime]*num_perm (never collides with a real
-    min, which is < prime).
-    """
-    n_perm = len(a)
-    n_rows = len(shingle_arrays)
-    p = np.uint64(prime)
-    out = np.full((n_rows, n_perm), prime, dtype=np.int64)
-
-    lens = np.fromiter((len(s) for s in shingle_arrays), dtype=np.int64, count=n_rows)
-    nz = np.flatnonzero(lens)
-    if nz.size == 0:
-        return out
-
-    flat = np.concatenate([np.asarray(shingle_arrays[i], dtype=np.int64) for i in nz])
-    h = np.mod(flat, np.int64(prime)).astype(np.uint64)  # non-negative residues
-    starts = np.zeros(nz.size, dtype=np.int64)
-    np.cumsum(lens[nz][:-1], out=starts[1:])
-
-    chunk = max(1, min(n_perm, _CHUNK_ELEMS // max(1, h.size)))
-    for lo in range(0, n_perm, chunk):
-        hi = min(lo + chunk, n_perm)
-        # (chunk, total_shingles) permuted values mod p, via the Mersenne
-        # reduction (2^31 ≡ 1 mod p): shifts+adds instead of u64 division
-        # — identical results to %, ~5x cheaper on the hot path
-        x = a[lo:hi, None] * h[None, :] + b[lo:hi, None]  # < 2^62
-        x = (x & p) + (x >> np.uint64(31))                # < 2^32
-        x = (x & p) + (x >> np.uint64(31))                # <= 2^31
-        x = (x & p) + (x >> np.uint64(31))                # <= p
-        x[x == p] = 0                                     # p ≡ 0 mod p
-        mins = np.minimum.reduceat(x, starts, axis=1)     # (chunk, n_nonempty)
-        out[nz, lo:hi] = mins.T.astype(np.int64)
-    return out
-
-
 def oph_minhash_batch(
     shingle_arrays: list[np.ndarray],
     a: np.ndarray,
@@ -87,14 +41,15 @@ def oph_minhash_batch(
 ) -> np.ndarray:
     """One-permutation MinHash with rotation densification.
 
-    Each shingle hash is mixed once ((a0·h + b0) mod p, same family as
-    the classic kernel) and assigned to bucket h mod num_perm; the
-    signature is the per-bucket min, with empty buckets filled from the
-    nearest non-empty bucket to the right (cyclic), offset-encoded so
+    Each shingle hash is mixed once ((a0·h + b0) mod p) and assigned
+    to bucket h mod num_perm; the signature is the per-bucket min, with
+    empty buckets filled from the nearest non-empty bucket to the right
+    (cyclic), offset-encoded so
     borrowed positions still collide consistently (Shrivastava & Li,
     ICML 2014). One pass over the shingles — memory traffic is
-    O(shingles), vs O(num_perm × shingles) for the classic kernel, which
-    saturates DRAM bandwidth long before it saturates cores.
+    O(shingles), vs O(num_perm × shingles) for the classic
+    per-permutation construction, which saturates DRAM bandwidth long
+    before it saturates cores.
 
     Empty input rows get the sentinel signature [prime·num_perm]* (never
     collides with real values).
@@ -111,8 +66,9 @@ def oph_minhash_batch(
 
     flat = np.concatenate([np.asarray(shingle_arrays[i], dtype=np.int64) for i in nz])
     h = np.mod(flat, p).astype(np.uint64)
-    # one mixing permutation (a[0], b[0]) — Mersenne reduction as in
-    # minhash_batch
+    # one mixing permutation (a[0], b[0]), reduced mod p via the
+    # Mersenne identity (2^31 ≡ 1 mod p): shifts+adds instead of u64
+    # division, identical results to %
     x = a[0] * h + b[0]
     x = (x & np.uint64(prime)) + (x >> np.uint64(31))
     x = (x & np.uint64(prime)) + (x >> np.uint64(31))

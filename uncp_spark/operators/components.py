@@ -102,7 +102,8 @@ def _checksum(e: DataFrame) -> tuple[int, int]:
 
 
 #: rounds/probes executed by the most recent connected_components call
-#: in this process — diagnostic only, never read by the algorithm.
+#: in this process (cleared on entry, so a call that raises leaves its
+#: own counts) — diagnostic only, never read by the algorithm.
 LAST_RUN_STATS: dict = {}
 
 
@@ -119,6 +120,7 @@ def connected_components(
     so the footprint is two snapshots, and a mid-CC kill resumes from
     the edges-stage checkpoint upstream with no pinned-executor state.
     """
+    LAST_RUN_STATS.clear()
     spark = edges.sparkSession
     # shuffle-interior id interning (see lsh.intern_hex_id): CC shuffles
     # (src, dst) through ~5-6 exchanges per round for O(log n) rounds;
@@ -224,13 +226,12 @@ def connected_components(
         chain.append(fin)
         converged = any(a == b for a, b in zip(chain, chain[1:]))
         prev = fin
-    if not converged:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
     # diagnostic counters (module-level, overwritten per call): lets the
     # bench/pipeline metrics pin the probe cadence so a regression in
     # rounds-per-graph-depth is observable, not inferred from wall time
-    LAST_RUN_STATS.clear()
     LAST_RUN_STATS.update({"rounds": it, "probes": probe})
+    if not converged:
+        raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
 
     # converged edge set is a forest of stars: u → component-min
     members = e.select(F.col("u").alias("file_id"), F.col("v").alias("cluster_id"))

@@ -1,20 +1,22 @@
-"""F14 — content normalization + shingling, entirely JVM-side.
+"""F14 — content normalization + the JVM-side token-hash prelude.
 
 uncp reads raw bytes and hashes them whole (src/systems/hashing.rs:188);
 its designed "content-aware" similarity tier (DESIGN.md:219-258) never
 shipped. The north_rule pins the tier as normalize → k-shingle →
-hash-per-shingle. Everything here is built-in expressions (lower /
-regexp_replace / split / transform / slice / xxhash64) so the whole
-stage runs inside whole-stage codegen — Python never touches content.
+hash-per-shingle. The part here is built-in expressions (lower /
+regexp_replace / split / transform / xxhash64) inside whole-stage
+codegen; the k-token windowing happens in the signature UDF
+(operators/signatures.py).
 
 Shingle definition (pinned by SimilarityConfig):
   - normalize: lowercase, collapse runs of whitespace to one space, trim
-  - tokens:    split on single space
-  - shingles:  k-token windows joined by ' ', hashed with xxhash64;
-               files with fewer than k tokens fall back to
+  - tokens:    split on single space, each hashed with xxhash64
+  - shingles:  k-token windows, id = rolling positional hash of the k
+               token hashes (kernels.shingle_ids_batch); files with
+               fewer than k tokens fall back to xxhash64 of
                char_shingle_k-char grams of the normalized text
-  - the shingle *set* (array_distinct) feeds MinHash; the raw token
-    hash array (with repetition) feeds frequency-weighted SimHash.
+  - the shingle *set* feeds MinHash; the raw token hash array (with
+    repetition) feeds frequency-weighted SimHash.
 """
 
 from __future__ import annotations
@@ -34,16 +36,6 @@ def normalize_content(col: Column, cfg: SimilarityConfig) -> Column:
     return out
 
 
-def _token_shingle_hashes(token_hashes: Column, k: int) -> Column:
-    # one k-token window per start offset; the shingle id is xxhash64 of
-    # the k token hashes — no k-token string is ever materialized
-    # (hashing 5 longs beats building + hashing a ~30-char string)
-    return F.transform(
-        F.sequence(F.lit(1), F.size(token_hashes) - (k - 1)),
-        lambda i: F.xxhash64(F.slice(token_hashes, i, k)),
-    )
-
-
 def _char_shingle_hashes(norm: Column, k: int) -> Column:
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.lit(1), F.length(norm) - (k - 1))),
@@ -61,11 +53,9 @@ def with_token_hashes(
 
     The k-token windowing, distinct, MinHash and SimHash all happen in
     one numpy pass inside the fused pandas UDF
-    (operators/signatures.with_signatures_fused) — per-window JVM work
-    (slice alloc + xxhash64 + array_distinct) measured as the
-    non-scaling hot spot of the signature stage, is gone entirely.
-    ``char_hashes`` materializes only for rows under ``shingle_k``
-    tokens (the fallback population, typically ≪1%)."""
+    (operators/signatures.signature_table), so the JVM never allocates
+    per-window slices. ``char_hashes`` materializes only for rows under
+    ``shingle_k`` tokens (the fallback population, typically ≪1%)."""
     norm = normalize_content(F.col(content_col), cfg)
     df = df.withColumn("norm_text", norm)
     tokens = F.split(F.col("norm_text"), " ")
@@ -76,29 +66,4 @@ def with_token_hashes(
             F.size("token_hashes") < cfg.shingle_k,
             _char_shingle_hashes(F.col("norm_text"), cfg.char_shingle_k),
         ),
-    )
-
-
-def with_shingles(
-    df: DataFrame,
-    cfg: SimilarityConfig,
-    content_col: str = "content",
-) -> DataFrame:
-    """Add ``norm_text``, ``token_hashes`` (with repetition, for SimHash)
-    and ``shingles`` (distinct shingle-hash set, for MinHash)."""
-    norm = normalize_content(F.col(content_col), cfg)
-    df = df.withColumn("norm_text", norm)
-    tokens = F.split(F.col("norm_text"), " ")
-    df = df.withColumn("token_hashes", F.transform(tokens, lambda t: F.xxhash64(t)))
-    token_shingles = _token_shingle_hashes(F.col("token_hashes"), cfg.shingle_k)
-    char_shingles = _char_shingle_hashes(F.col("norm_text"), cfg.char_shingle_k)
-    return (
-        df.withColumn(
-            "shingles",
-            F.array_distinct(
-                F.when(F.size("token_hashes") >= cfg.shingle_k, token_shingles)
-                .otherwise(char_shingles)
-            ),
-        )
-        .withColumn("n_shingles", F.size("shingles"))
     )

@@ -1,12 +1,11 @@
-"""Combined signature stage: MinHash + SimHash in ONE pandas UDF pass.
+"""The signature stage: k-shingle ids + MinHash + SimHash in ONE pandas UDF pass.
 
-with_minhash / with_simhash (separate UDFs) each ship the shingle/token
-arrays driver→python through Arrow; fusing them halves the Arrow
-transfer and the python-worker passes — the signature stage is the
-pipeline's hot spot (it touches every distinct content once).
-
-Same kernels, same pinned config, bit-identical output to the separate
-operators (tested in tests/test_shingle_sigs.py).
+The JVM stops at the per-token xxhash64 prelude
+(shingle.with_token_hashes); k-token windowing, distinct, one-permutation
+MinHash, SimHash and the bottom-m containment sketch all happen in one
+numpy pass per Arrow batch — the signature stage touches every distinct
+content once, so one Arrow transfer and one python-worker pass per row
+is the whole cost.
 """
 
 from __future__ import annotations
@@ -19,56 +18,13 @@ from pyspark.sql import types as T
 
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.functions.kernels import (
-    minhash_batch,
     minhash_params,
     oph_minhash_batch,
+    shingle_ids_batch,
+    shingle_weights,
     simhash_batch,
 )
-
-_SIG_TYPE = T.StructType(
-    [
-        T.StructField("minhash", T.ArrayType(T.LongType()), False),
-        T.StructField("simhash", T.LongType(), False),
-    ]
-)
-
-
-def make_signatures_udf(cfg: SimilarityConfig):
-    a, b = minhash_params(cfg)
-    prime = cfg.prime
-    num_perm = cfg.num_perm
-    use_oph = cfg.minhash_impl == "oph"
-
-    @F.pandas_udf(_SIG_TYPE)
-    def signatures_udf(shingles: pd.Series, token_hashes: pd.Series) -> pd.DataFrame:
-        sh = [
-            np.asarray(s, dtype=np.int64) if s is not None else np.empty(0, np.int64)
-            for s in shingles
-        ]
-        th = [
-            np.asarray(s, dtype=np.int64) if s is not None else np.empty(0, np.int64)
-            for s in token_hashes
-        ]
-        if use_oph:
-            mh = oph_minhash_batch(sh, a, b, prime, num_perm)
-        else:
-            mh = minhash_batch(sh, a, b, prime)
-        sim = simhash_batch(th)
-        return pd.DataFrame({"minhash": list(mh), "simhash": sim})
-
-    return signatures_udf
-
-
-def with_signatures(df: DataFrame, cfg: SimilarityConfig) -> DataFrame:
-    """Adds ``minhash`` + ``simhash`` from ``shingles``/``token_hashes``."""
-    sig = make_signatures_udf(cfg)(F.col("shingles"), F.col("token_hashes"))
-    return (
-        df.withColumn("_sig", sig)
-        .withColumn("minhash", F.col("_sig.minhash"))
-        .withColumn("simhash", F.col("_sig.simhash"))
-        .drop("_sig")
-    )
-
+from uncp_spark.operators.shingle import with_token_hashes
 
 _FUSED_TYPE = T.StructType(
     [
@@ -81,14 +37,25 @@ _FUSED_TYPE = T.StructType(
 )
 
 
-_FUSED_TYPE_SKINNY = T.StructType(
-    [
-        T.StructField("n_shingles", T.IntegerType(), False),
-        T.StructField("minhash", T.ArrayType(T.LongType()), False),
-        T.StructField("simhash", T.LongType(), False),
-        T.StructField("bottomk", T.ArrayType(T.LongType()), False),
+# the production shape: every field but the unbounded shingle arrays
+_FUSED_TYPE_SKINNY = T.StructType(_FUSED_TYPE.fields[1:])
+
+
+def _shingle_batch(
+    token_hashes: pd.Series, char_hashes: pd.Series, k: int, weights: np.ndarray
+) -> tuple[list[np.ndarray], list[np.ndarray]]:
+    """(token-hash arrays, sorted distinct shingle ids) for one Arrow
+    batch: k-token rolling ids, or the char-gram set for rows shorter
+    than k tokens (the only rows whose ``char_hashes`` is non-null)."""
+    th = [
+        np.asarray(s, dtype=np.int64) if s is not None else np.empty(0, np.int64)
+        for s in token_hashes
     ]
-)
+    sh = shingle_ids_batch(th, k, weights)
+    for i, ch in enumerate(char_hashes):
+        if ch is not None:
+            sh[i] = np.unique(np.asarray(ch, dtype=np.int64))
+    return th, sh
 
 
 def make_fused_signatures_udf(cfg: SimilarityConfig, include_shingles: bool = True):
@@ -98,10 +65,8 @@ def make_fused_signatures_udf(cfg: SimilarityConfig, include_shingles: bool = Tr
     ``char_hashes`` (char-gram hashes, non-null only for rows shorter
     than ``shingle_k`` tokens). The k-token shingle ids come from the
     vectorized rolling positional hash (kernels.shingle_ids_batch) —
-    the JVM never materializes window slices, which was the measured
-    scaling bottleneck of the expression-based shingle stage. Shingle
-    id VALUES differ from the expression path (splitmix-rolled vs
-    xxhash64-of-slice); all consumers use them as opaque set keys.
+    the JVM never materializes window slices. Consumers use the ids as
+    opaque set keys.
 
     ``include_shingles=False`` drops the shingle arrays from the RETURN
     STRUCT — a select after the UDF cannot do this (the whole struct
@@ -109,12 +74,9 @@ def make_fused_signatures_udf(cfg: SimilarityConfig, include_shingles: bool = Tr
     the dominant transfer payload (~8 B/token/row vs 1 KB fixed). The
     production pipeline runs skinny and recomputes shingles for the
     residual verify set only (shingle_sets below)."""
-    from uncp_spark.functions.kernels import shingle_ids_batch, shingle_weights
-
     a, b = minhash_params(cfg)
     prime = cfg.prime
     num_perm = cfg.num_perm
-    use_oph = cfg.minhash_impl == "oph"
     k = cfg.shingle_k
     m = cfg.containment_sketch_size
     weights = shingle_weights(k, cfg.seed)
@@ -123,18 +85,8 @@ def make_fused_signatures_udf(cfg: SimilarityConfig, include_shingles: bool = Tr
 
     @F.pandas_udf(out_type)
     def fused_udf(token_hashes: pd.Series, char_hashes: pd.Series) -> pd.DataFrame:
-        th = [
-            np.asarray(s, dtype=np.int64) if s is not None else np.empty(0, np.int64)
-            for s in token_hashes
-        ]
-        sh = shingle_ids_batch(th, k, weights)
-        for i, ch in enumerate(char_hashes):
-            if ch is not None:
-                sh[i] = np.unique(np.asarray(ch, dtype=np.int64))
-        if use_oph:
-            mh = oph_minhash_batch(sh, a, b, prime, num_perm)
-        else:
-            mh = minhash_batch(sh, a, b, prime)
+        th, sh = _shingle_batch(token_hashes, char_hashes, k, weights)
+        mh = oph_minhash_batch(sh, a, b, prime, num_perm)
         sim = simhash_batch(th)
         cols = {
             "n_shingles": [len(s) for s in sh],
@@ -151,45 +103,15 @@ def make_fused_signatures_udf(cfg: SimilarityConfig, include_shingles: bool = Tr
     return fused_udf
 
 
-def with_signatures_fused(df: DataFrame, cfg: SimilarityConfig,
-                          include_shingles: bool = True) -> DataFrame:
-    """Adds [``shingles``/]``n_shingles``/``minhash``/``simhash`` from
-    the ``with_token_hashes`` prelude in one fused pandas-UDF pass."""
-    sig = make_fused_signatures_udf(cfg, include_shingles)(
-        F.col("token_hashes"), F.col("char_hashes")
-    )
-    out = df.withColumn("_sig", sig)
-    if include_shingles:
-        out = out.withColumn("shingles", F.col("_sig.shingles"))
-    return (
-        out.withColumn("n_shingles", F.col("_sig.n_shingles"))
-        .withColumn("minhash", F.col("_sig.minhash"))
-        .withColumn("simhash", F.col("_sig.simhash"))
-        .withColumn("bottomk", F.col("_sig.bottomk"))
-        .drop("_sig")
-    )
-
-
 def make_shingles_udf(cfg: SimilarityConfig):
     """Shingle-set-only pandas UDF — same kernel, same ids, bit-identical
-    to the ``shingles`` column of the fused pass (deterministic rolling
-    positional hash + char-gram fallback)."""
-    from uncp_spark.functions.kernels import shingle_ids_batch, shingle_weights
-
+    to the ``shingles`` column of the fused pass."""
     k = cfg.shingle_k
     weights = shingle_weights(k, cfg.seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def shingles_udf(token_hashes: pd.Series, char_hashes: pd.Series) -> pd.Series:
-        th = [
-            np.asarray(s, dtype=np.int64) if s is not None else np.empty(0, np.int64)
-            for s in token_hashes
-        ]
-        sh = shingle_ids_batch(th, k, weights)
-        for i, ch in enumerate(char_hashes):
-            if ch is not None:
-                sh[i] = np.unique(np.asarray(ch, dtype=np.int64))
-        return pd.Series(list(sh))
+        return pd.Series(_shingle_batch(token_hashes, char_hashes, k, weights)[1])
 
     return shingles_udf
 
@@ -210,16 +132,10 @@ def shingle_sets(files: DataFrame, cfg: SimilarityConfig,
 
     Ids are bit-identical to what the fused pass produced (same
     token-hash prelude, same kernel, pinned seed), so exact-Jaccard /
-    containment values are unchanged. ``cfg.shingle_impl`` selects the
-    matching implementation ("expr" recomputes via the expression
-    path's xxhash64-of-slice ids)."""
+    containment values are unchanged."""
     src = files.select("file_id", "content")
     if ids is not None:
         src = src.join(ids.select("file_id"), "file_id", "left_semi")
-    from uncp_spark.operators.shingle import with_shingles, with_token_hashes
-
-    if cfg.shingle_impl == "expr":
-        return with_shingles(src, cfg).select("file_id", "shingles")
     pre = with_token_hashes(src, cfg)
     return pre.select(
         "file_id",
@@ -231,24 +147,23 @@ def shingle_sets(files: DataFrame, cfg: SimilarityConfig,
 
 def signature_table(reps: DataFrame, cfg: SimilarityConfig,
                     include_shingles: bool = True) -> DataFrame:
-    """The signature stage, impl selected by ``cfg.shingle_impl`` — the
-    one entry point pipeline/bench/queries share.
+    """The signature stage — the one entry point pipeline/bench/queries
+    share. Adds [``shingles``/]``n_shingles``/``minhash``/``simhash``/
+    ``bottomk`` (plus the ``with_token_hashes`` prelude columns) in one
+    fused pandas-UDF pass.
 
     ``include_shingles=False`` is the production shape: fixed-width
-    output only (see make_fused_signatures_udf); the expression impl
-    simply drops the column (it never crosses Arrow there)."""
-    from uncp_spark.operators.shingle import with_shingles, with_token_hashes
-
-    if cfg.shingle_impl == "fused":
-        return with_signatures_fused(
-            with_token_hashes(reps, cfg), cfg, include_shingles
-        )
-    if cfg.shingle_impl == "expr":
-        out = with_signatures(with_shingles(reps, cfg), cfg).withColumn(
-            # same bottom-m-by-ascending-int64 sketch as the fused path
-            # (ids differ between impls; the order rule is identical)
-            "bottomk",
-            F.slice(F.array_sort("shingles"), 1, cfg.containment_sketch_size),
-        )
-        return out if include_shingles else out.drop("shingles")
-    raise ValueError(f"unknown shingle_impl: {cfg.shingle_impl!r}")
+    output only (see make_fused_signatures_udf)."""
+    sig = make_fused_signatures_udf(cfg, include_shingles)(
+        F.col("token_hashes"), F.col("char_hashes")
+    )
+    out = with_token_hashes(reps, cfg).withColumn("_sig", sig)
+    if include_shingles:
+        out = out.withColumn("shingles", F.col("_sig.shingles"))
+    return (
+        out.withColumn("n_shingles", F.col("_sig.n_shingles"))
+        .withColumn("minhash", F.col("_sig.minhash"))
+        .withColumn("simhash", F.col("_sig.simhash"))
+        .withColumn("bottomk", F.col("_sig.bottomk"))
+        .drop("_sig")
+    )

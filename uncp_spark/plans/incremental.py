@@ -2,11 +2,11 @@
 
 Reference anchor: uncp's incremental contract is "only changed files
 re-hashed" (src/detector.rs:783-885; merge-on-save src/persist.rs:
-208-233). The batch pipeline honors that for the HASH tier via
-streaming/incremental.py, but any input change used to invalidate and
-rebuild pairs/edges/labels for the whole corpus through the (correct
-but total) checkpoint nonce chain. This module extends the contract to
-the pair/cluster tiers this engine added:
+208-233). Without this module any input change invalidates and
+rebuilds pairs/edges/labels for the whole corpus through the (correct
+but total) checkpoint nonce chain. This module extends the contract
+past the file diff (tier 1: surviving, delta and dead files keyed by
+(repo, path, commit)) to the pair/cluster tiers this engine added:
 
   signatures   computed ONLY for genuinely-new content (shas with no
                surviving signature); content whose representative file

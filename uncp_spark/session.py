@@ -15,6 +15,15 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """A quarter of host memory, at least 1 GiB: the driver heap plus
+    off-heap, Python workers and page cache must fit the host, or the
+    kernel OOM-kills the JVM mid-run."""
+    with open("/proc/meminfo") as f:
+        total_kib = int(f.readline().split()[1])
+    return f"{max(1, total_kib // (4 << 20))}g"
+
+
 def get_spark(
     cores: int | str | None = None,
     app_name: str = "uncp_spark",
@@ -83,7 +92,8 @@ def get_spark(
         # instead of the 2 GB default — a runaway lineage then truncates
         # a log string instead of stalling the driver building it
         .config("spark.sql.maxPlanStringLength", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -5,9 +5,9 @@ changed paths back through the hash pipeline (src/systems/discovery.rs
 re-scan + src/engine.rs event loop, T5 in SURVEY.md §2.9). That loop is
 imperative; the Spark-first form is a Structured Streaming file source
 watching a snapshot-drop directory, with ``foreachBatch`` merging each
-micro-batch into the persisted dedup state exactly like the batch
-``apply_increment`` path — one code path for batch and streaming
-(the incremental merge is the same function).
+micro-batch into the persisted dedup state by keep-last on
+(repo, path) — a drained stream equals the batch result over the same
+snapshots.
 
 Scale notes:
   - The file source lists only NEW files per trigger (checkpointed
