@@ -490,29 +490,6 @@ def q_lsh_recall_vs_bruteforce(spark, sf_dir):
     )
 
 
-def q_same_name_unique_content(spark, sf_dir):
-    """J4: duplicates in one dimension (filename), unique in another
-    (content hash) — uncp DESIGN.md:283-288."""
-    from uncp_spark.operators.relations import dup_in_one_dim_unique_in_other
-
-    files = _files(spark, sf_dir)
-    return dup_in_one_dim_unique_in_other(files, "filename", "sha256").select(
-        "repo", "path", "filename"
-    )
-
-
-def q_groups_containing_file(spark, sf_dir):
-    """J4 point probe: all same-name groups containing a given path."""
-    from uncp_spark.operators.relations import groups_containing
-
-    groups = same_name_groups(_files(spark, sf_dir))
-    return groups_containing(groups, "docs/doc_0.txt").select(
-        "filename_key",
-        F.array_join("file_paths", ",").alias("members"),
-        "file_count",
-    )
-
-
 def q_ann_cosine_topk(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
@@ -769,7 +746,7 @@ def q_language_id(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # exact tier + relations (oracle-checked)
+        # exact tier + group relations (oracle-checked)
         "sha256_invariant": q_sha256_invariant,
         "exact_dup_clusters": q_exact_dup_clusters,
         "same_size_groups": q_same_size_groups,
@@ -799,8 +776,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shingle_stats": q_shingle_stats,
         "fingerprint_cardinality": q_fingerprint_cardinality,
         "language_id": q_language_id,
-        "same_name_unique_content": q_same_name_unique_content,
-        "groups_containing_file": q_groups_containing_file,
         # full-pipeline end-to-end (oracle-checked: recursive-closure
         # twin over the first-principles accepted edge set)
         "near_dup_clusters": q_near_dup_clusters,
@@ -1272,26 +1247,6 @@ def oracle_sql() -> dict[str, str]:
               FROM sh a JOIN sh b ON a.sha < b.sha
             )
             SELECT sha_a, sha_b, jaccard FROM scored WHERE jaccard >= 0.75
-        """,
-        "same_name_unique_content": f"""
-            {_FILES}
-            SELECT repo, path, filename FROM (
-              SELECT repo, path, filename,
-                     count(*) OVER (PARTITION BY filename) AS n_dup,
-                     count(*) OVER (PARTITION BY sha256) AS n_uni
-              FROM files
-            ) WHERE n_dup >= 2 AND n_uni = 1
-        """,
-        "groups_containing_file": f"""
-            {_FILES}
-            SELECT filename AS filename_key,
-                   CASE WHEN count(*) > 1000 THEN ''
-                        ELSE array_to_string(list_sort(list(path)), ',')
-                   END AS members,
-                   count(*) AS file_count
-            FROM files GROUP BY filename
-            HAVING count(*) >= 2
-               AND list_contains(list(path), 'docs/doc_0.txt')
         """,
         "near_dup_clusters": f"""
             {_NEARDUP_MEMB}

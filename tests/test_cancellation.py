@@ -9,6 +9,7 @@ via job-group cancellation.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import threading
 import time
@@ -17,7 +18,7 @@ import pandas as pd
 import pytest
 
 from uncp_spark.plans.cancellation import CancellationToken, CancelledError
-from uncp_spark.plans.pipeline import DedupPipeline, StageSpec
+from uncp_spark.plans.pipeline import DedupPipeline
 
 
 def test_precancelled_token_stops_before_any_stage(spark, repos_df, tmpdir_path):
@@ -45,9 +46,7 @@ def test_cancel_mid_pipeline_keeps_checkpoints_and_resumes(
         token._event.set()  # flag only — let this stage finish writing
         return orig_build(spark_, ctx)
 
-    stages[1] = StageSpec(
-        sigs_spec.name, sigs_spec.deps, cancelling_build, sigs_spec.token_salt
-    )
+    stages[1] = dataclasses.replace(sigs_spec, build=cancelling_build)
     pipe.stages = stages
     with pytest.raises(CancelledError):
         pipe.run(spark, repos_df, input_token="fixture", cancel=token)
@@ -128,9 +127,7 @@ def test_pause_blocks_at_stage_boundary_then_resumes(
         token.pause()
         return orig_build(spark_, ctx)
 
-    stages[0] = StageSpec(
-        files_spec.name, files_spec.deps, pausing_build, files_spec.token_salt
-    )
+    stages[0] = dataclasses.replace(files_spec, build=pausing_build)
     pipe.stages = stages
     done: dict = {}
 

@@ -25,7 +25,6 @@ from uncp_spark.errors import (
     CheckpointCorruptError,
     ConfigMismatchError,
     UncpSparkError,
-    VersionMismatchError,
 )
 from uncp_spark.sources import checkpoint as ckpt
 
@@ -33,12 +32,10 @@ from uncp_spark.sources import checkpoint as ckpt
 def test_taxonomy_subclasses_builtin_equivalents():
     # old except-sites caught ValueError/RuntimeError; the typed classes
     # must keep matching there
-    assert issubclass(VersionMismatchError, ValueError)
     assert issubclass(ConfigMismatchError, ValueError)
     assert issubclass(CheckpointCorruptError, RuntimeError)
     assert issubclass(CancelledError, RuntimeError)
-    for e in (VersionMismatchError, ConfigMismatchError,
-              CheckpointCorruptError, CancelledError):
+    for e in (ConfigMismatchError, CheckpointCorruptError, CancelledError):
         assert issubclass(e, UncpSparkError)
 
 
@@ -46,28 +43,6 @@ def test_cancellation_reexport_is_same_class():
     from uncp_spark.plans.cancellation import CancelledError as FromPlans
 
     assert FromPlans is CancelledError
-
-
-def test_version_mismatch_raises_typed(spark, repos_df, tmpdir_path):
-    from uncp_spark.operators.ingest import ingest
-    from uncp_spark.plans.registry import register_relation, save_relation
-
-    files = ingest(repos_df).select("filename", "path", "size").withColumn(
-        "file_count", F.lit(1)
-    )
-
-    def producer(f):
-        return (
-            f.groupBy("filename").agg(F.count("*").alias("file_count"))
-        )
-
-    register_relation("_err_rel", "test", ["filename", "file_count"],
-                      producer, version=1)
-    save_relation("_err_rel", files, tmpdir_path, "chash", "tok")
-    register_relation("_err_rel", "test", ["filename", "file_count"],
-                      producer, version=2)
-    with pytest.raises(VersionMismatchError):
-        save_relation("_err_rel", files, tmpdir_path, "chash", "tok")
 
 
 def _fake_stage(spark, base, name, config_hash):

@@ -130,15 +130,12 @@ def test_relation_windows_exclude_content(spark):
     row_number-within-key form serialized the hottest key's entire
     membership through one ranking task (partial-agg-free) before the
     member cap nulled it, so hot keys are now handled by count-first +
-    anti-join instead (see _group_relation).
-    dup_in_one_dim_unique_in_other keeps its windows but they must stay
-    skinny."""
+    anti-join instead (see _group_relation)."""
     from uncp_spark.fixtures import repos_from_documents
     from uncp_spark.operators.exact import (
         exact_clusters, same_name_groups, same_size_groups,
     )
     from uncp_spark.operators.ingest import ingest
-    from uncp_spark.operators.relations import dup_in_one_dim_unique_in_other
 
     files = ingest(repos_from_documents(spark, SF_DIR))
     for df in (
@@ -150,12 +147,6 @@ def test_relation_windows_exclude_content(spark):
         assert not _node_blocks(plan, ("Window", "WindowGroupLimit")), plan
         for block in _node_blocks(plan, ("Exchange",)):
             assert "content#" not in block, block
-
-    plan = _fmt(dup_in_one_dim_unique_in_other(files, "filename", "sha256"))
-    windows = _node_blocks(plan, ("Window", "WindowGroupLimit"))
-    assert windows, "expected a window in the dup/unique relation plan"
-    for block in windows:
-        assert "content#" not in block, block
 
 
 def test_pair_expansion_is_two_step_explode(spark):
@@ -222,7 +213,8 @@ def test_containment_index_is_single_exchange(spark):
     and hot entries die map-side before the collect_list exchange. The
     sizes pre-pass partial-aggregates map-side, so its exchange carries
     one row per distinct shid, not the index. Regression here doubles
-    the candidate-tier shuffle volume at any scale."""
+    the candidate-tier shuffle volume at any scale. The pair ids cross
+    the (src, dst) count exchange as 16-byte binaries, not 32-char hex."""
     from uncp_spark.fixtures import repos_from_documents
     from uncp_spark.operators.containment_index import containment_candidates
     from uncp_spark.operators.exact import exact_representatives
@@ -255,3 +247,18 @@ def test_containment_index_is_single_exchange(spark):
     skinny = [b for b in shid_ex if "count" in b and "buf" not in b]
     assert len(fat) == 1, f"index buffer exchanged {len(fat)}x, want 1"
     assert len(fat) + len(skinny) == len(shid_ex)
+    # ids cross the (src, dst) count exchange interned as binary(16);
+    # the hex conversion sits above it. Formatted node ids number every
+    # child before its parent, so nothing under the exchange may carry
+    # a larger id than it.
+    import re
+
+    def node_id(block):
+        return int(re.match(r"\((\d+)\)", block.strip()).group(1))
+
+    pair_ex = [b for b in _node_blocks(plan, ("Exchange",))
+               if "hashpartitioning(src" in b]
+    assert len(pair_ex) == 1, pair_ex
+    hexed = [b for b in _node_blocks(plan, ("Project",)) if "lower(hex(" in b]
+    assert hexed, "expected a hex conversion of the pair ids"
+    assert all(node_id(b) > node_id(pair_ex[0]) for b in hexed), hexed

@@ -27,7 +27,6 @@ def test_package_zipimports_without_repo_on_path(tmp_path):
         "import uncp_spark.plans.pipeline",
         "import uncp_spark.plans.incremental",
         "import uncp_spark.functions.kernels",
-        "import uncp_spark.streaming.stream_ingest",
         f"assert uncp_spark.__file__.startswith({zip_path!r}), uncp_spark.__file__",
         "print('ZIPIMPORT_OK')",
     ])

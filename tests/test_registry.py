@@ -1,90 +1,65 @@
-"""X1/X2/X3 — pluggable scorer + relation registries and the stage
-protocol: registering a custom scorer, relation, and pipeline stage must
-require zero edits to verify.py / relations.py / pipeline.py
-(reference: SimilarityProvider DESIGN.md:240-258, RelationKey
-src/relations.rs:44-66, SystemRunner src/systems/mod.rs:18-42)."""
+"""X3 — the stage protocol: a custom pipeline stage, or a replaced
+built-in one (a custom scorer is a replaced ``edges`` stage), needs no
+edits to pipeline.py (reference: SystemRunner
+src/systems/mod.rs:18-42)."""
 
 from __future__ import annotations
+
+import dataclasses
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from uncp_spark.plans.registry import (
-    build_relation,
-    get_relation,
-    get_scorer,
-    list_relations,
-    list_scorers,
-    register_relation,
-    register_scorer,
-)
 from uncp_spark.plans.pipeline import DedupPipeline, StageSpec
-
-
-def test_builtin_scorer_and_relations_registered():
-    assert get_scorer("minhash_simhash_containment").priority == 100
-    names = {r.name for r in list_relations()}
-    assert {"identical_hashes", "same_name", "same_size"} <= names
-
-
-def test_unknown_names_raise():
-    with pytest.raises(KeyError, match="unknown scorer"):
-        get_scorer("nope")
-    with pytest.raises(KeyError, match="unknown relation"):
-        get_relation("nope")
-
-
-def test_register_custom_relation_with_schema_validation(spark, repos_df):
-    from uncp_spark.operators.ingest import ingest
-
-    def by_ext(files):
-        return files.groupBy(F.col("ext").alias("ext_key")).agg(
-            F.sort_array(F.collect_list("path")).alias("file_paths"),
-            F.count("*").alias("file_count"),
-        )
-
-    register_relation("same_ext_test", "files sharing an extension",
-                      ["ext_key", "file_paths", "file_count"], by_ext)
-    files = ingest(repos_df)
-    out = build_relation("same_ext_test", files)
-    assert out.count() > 0
-    assert {"ext_key", "file_paths", "file_count"} <= set(out.columns)
-
-    # schema validation: a producer that misses declared columns fails
-    register_relation("broken_test", "broken", ["missing_col"],
-                      lambda f: f.select("path"))
-    with pytest.raises(ValueError, match="missing_col"):
-        build_relation("broken_test", files)
+from uncp_spark.sources import checkpoint as ckpt
 
 
 def test_custom_scorer_selected_by_pipeline(spark, repos_df, tmp_path):
-    """A scorer registered by name is picked up via DedupPipeline(scorer=...)
-    and swapping scorers invalidates the edges checkpoint (token_salt)."""
+    """A custom scorer is a replaced ``edges`` StageSpec: its edges reach
+    the labels, and its ``token_salt`` keeps its checkpoint apart from
+    the default graph's, so going back to the default rebuilds edges
+    onward while files, sigs and pairs resume."""
 
-    def exactish_scorer(pairs, sigs, cfg):
+    def accept_all_edges(spark_, ctx):
         # accept every candidate pair with a constant score
-        return pairs.select(
+        return ctx["pairs"].select(
             "src", "dst", F.lit(1.0).alias("score"),
             F.lit("custom").alias("edge_type"),
+            F.lit(None).cast("string").alias("data"),
         )
 
-    register_scorer("accept_all_test", exactish_scorer, priority=10,
-                    description="test scorer")
-
     base = str(tmp_path / "ckpt")
-    pipe = DedupPipeline(base_dir=base, scorer="accept_all_test")
+    pipe = DedupPipeline(base_dir=base)
+    pipe.stages = [
+        dataclasses.replace(s, build=accept_all_edges, token_salt="accept_all")
+        if s.name == "edges" else s
+        for s in pipe.default_stages()
+    ]
     out = pipe.run(spark, repos_df, input_token="fixture")
     assert out["clusters"].count() > 0
-    edge_types = {r[0] for r in out["edges"].select("edge_type").distinct().collect()}
-    assert "custom" in edge_types           # custom scorer produced near edges
-    assert "exact" in edge_types or len(edge_types) >= 1
+    edges = out["edges"]
+    assert {r[0] for r in edges.select("edge_type").distinct().collect()} == {"custom"}
+    # every custom edge joins its two ends in one component
+    labels = out["labels"]
+    ends = (
+        edges.join(labels.select(F.col("file_id").alias("src"),
+                                 F.col("cluster_id").alias("c_src")), "src")
+        .join(labels.select(F.col("file_id").alias("dst"),
+                            F.col("cluster_id").alias("c_dst")), "dst")
+    )
+    assert ends.count() == edges.count() > 0
+    assert ends.filter(F.col("c_src") != F.col("c_dst")).count() == 0
 
-    # switching back to the default scorer must invalidate edges+downstream
-    pipe2 = DedupPipeline(base_dir=base)
-    out2 = pipe2.run(spark, repos_df, input_token="fixture")
+    # switching back to the default graph must invalidate edges+downstream
+    out2 = DedupPipeline(base_dir=base).run(spark, repos_df, input_token="fixture")
     flags = {s["stage"]: s["resumed"] for s in out2["report"]["stages"]}
     assert flags["files"] and flags["sigs"] and flags["pairs"]
     assert not flags["edges"] and not flags["labels"] and not flags["clusters"]
+    assert "custom" not in {
+        r[0] for r in out2["edges"].select("edge_type").distinct().collect()
+    }
 
 
 def test_custom_stage_appended(spark, repos_df, tmp_path):
@@ -94,6 +69,7 @@ def test_custom_stage_appended(spark, repos_df, tmp_path):
     pipe = DedupPipeline(base_dir=base)
 
     def build_report(spark_, ctx):
+        time.sleep(0.3)  # eager work before the checkpoint write
         return ctx["clusters"].agg(
             F.count("*").alias("n_clusters"),
             F.sum("dup_count").alias("n_dup_files"),
@@ -108,6 +84,11 @@ def test_custom_stage_appended(spark, repos_df, tmp_path):
     assert names == ["files", "sigs", "pairs", "edges", "labels",
                      "clusters", "summary"]
     assert out["summary"].collect()[0]["n_clusters"] > 0
+    # a stage's reported seconds span its build as well as its write
+    secs = {s["stage"]: s["seconds"] for s in out["report"]["stages"]}
+    write_s = ckpt.read_manifest(os.path.join(base, "summary"))["seconds"]
+    assert secs["summary"] >= 0.3
+    assert secs["summary"] >= 0.3 + write_s - 0.002
     # the custom stage is checkpointed and resumes like a built-in
     out2 = pipe.run(spark, repos_df, input_token="fixture")
     assert all(s["resumed"] for s in out2["report"]["stages"])

@@ -131,110 +131,6 @@ def test_planted_groups_cocluster(first_run):
     assert split / total <= 0.05, f"{split}/{total} planted groups split"
 
 
-def test_merge_checkpoint_relation_store(spark, tmpdir_path):
-    """S7 relation merge-on-save (uncp src/relations.rs:285-293): a
-    second save's rows win per key, keys only in the first save survive
-    — repeated scans accumulate the union, never replace."""
-    import os
-
-    from uncp_spark.sources import checkpoint as ckpt
-
-    path = os.path.join(tmpdir_path, "same_name")
-    v1 = spark.createDataFrame(
-        [("a.txt", 2, 100), ("b.txt", 3, 300)],
-        "filename_key string, file_count long, total_size long",
-    )
-    ckpt.merge_checkpoint(v1, path, "same_name", "cfg", "t1",
-                          keys=["filename_key"])
-    v2 = spark.createDataFrame(
-        [("b.txt", 5, 999), ("c.txt", 2, 50)],
-        "filename_key string, file_count long, total_size long",
-    )
-    res = ckpt.merge_checkpoint(v2, path, "same_name", "cfg", "t2",
-                                keys=["filename_key"])
-    got = {
-        r.filename_key: (r.file_count, r.total_size)
-        for r in spark.read.parquet(path).collect()
-    }
-    # a: old-only key survives; b: NEW row wins; c: added
-    assert got == {"a.txt": (2, 100), "b.txt": (5, 999), "c.txt": (2, 50)}
-    assert res.rows == 3
-    m = ckpt.read_manifest(path)
-    assert m["input_token"] == "t2" and m["complete"] is True
-    assert not os.path.exists(path + ".merge_tmp")
-    assert not os.path.exists(path + ".merge_old")
-
-
-def test_merge_checkpoint_recovers_mid_swap_crash(spark, tmpdir_path):
-    """Crash between the two renames leaves .merge_old as the only valid
-    copy; the next merge must restore it and keep accumulating."""
-    import os
-
-    from uncp_spark.sources import checkpoint as ckpt
-
-    path = os.path.join(tmpdir_path, "rel")
-    v1 = spark.createDataFrame([("a", 1)], "k string, v long")
-    ckpt.merge_checkpoint(v1, path, "rel", "cfg", "t1", keys=["k"])
-    # simulate: state renamed away, tmp never landed
-    os.rename(path, path + ".merge_old")
-    v2 = spark.createDataFrame([("b", 2)], "k string, v long")
-    ckpt.merge_checkpoint(v2, path, "rel", "cfg", "t2", keys=["k"])
-    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {"a": 1, "b": 2}, "accumulated store was lost in the crash"
-    assert not os.path.exists(path + ".merge_old")
-
-
-def test_merge_checkpoint_null_keys_replace_not_duplicate(spark, tmpdir_path):
-    import os
-
-    from uncp_spark.sources import checkpoint as ckpt
-
-    path = os.path.join(tmpdir_path, "nullk")
-    v1 = spark.createDataFrame([(None, 1), ("x", 1)], "k string, v long")
-    ckpt.merge_checkpoint(v1, path, "nullk", "cfg", "t1", keys=["k"])
-    v2 = spark.createDataFrame([(None, 9)], "k string, v long")
-    ckpt.merge_checkpoint(v2, path, "nullk", "cfg", "t2", keys=["k"])
-    rows = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert rows == {(None, 9), ("x", 1)}, rows
-
-
-def test_save_relation_accumulates_across_scans(spark, tmpdir_path):
-    """The registry's merge-on-save surface: two scans' same_name
-    relations accumulate per filename key, the later scan winning on
-    overlap (uncp src/relations.rs:285-293)."""
-    import os
-
-    from uncp_spark.fixtures import FixtureSpec, make_repos
-    from uncp_spark.operators.ingest import ingest
-    from uncp_spark.plans.registry import save_relation
-
-    f1 = ingest(make_repos(spark, FixtureSpec(n_repos=4, files_per_repo=3,
-                                              seed=1)))
-    f2 = ingest(make_repos(spark, FixtureSpec(n_repos=4, files_per_repo=3,
-                                              seed=2)))
-    save_relation("same_name", f1, tmpdir_path, "cfg", "scan1")
-    r2 = save_relation("same_name", f2, tmpdir_path, "cfg", "scan2")
-    store = spark.read.parquet(os.path.join(tmpdir_path, "same_name"))
-    keys = {r.filename_key for r in store.select("filename_key").collect()}
-    k1 = {r.filename_key for r in
-          spark.read.parquet(os.path.join(tmpdir_path, "same_name"))
-          .collect()}
-    only_scan1 = {
-        r.filename_key
-        for r in __import__("uncp_spark.operators.exact",
-                            fromlist=["same_name_groups"])
-        .same_name_groups(f1).select("filename_key").collect()
-    }
-    only_scan2 = {
-        r.filename_key
-        for r in __import__("uncp_spark.operators.exact",
-                            fromlist=["same_name_groups"])
-        .same_name_groups(f2).select("filename_key").collect()
-    }
-    assert keys == only_scan1 | only_scan2
-    assert r2.rows == len(keys)
-
-
 def test_checkpoint_write_is_single_scan(spark, tmpdir_path):
     """Round-3 verdict defect #6: the post-write per-partition metrics
     used to be a SECOND full scan of the checkpoint (doubling checkpoint
@@ -266,47 +162,3 @@ def test_checkpoint_write_is_single_scan(spark, tmpdir_path):
     assert [p["partition_id"] for p in pm] == list(range(len(pm)))
     # footer-derived metrics must agree with an actual scan
     assert spark.read.parquet(res.path).count() == 100
-
-
-def test_save_relation_version_mismatch_refuses(spark, tmpdir_path):
-    """X2 schema-version enforcement (uncp RelationKey::version,
-    src/relations.rs:58-61; persisted meta version, src/persist.rs:15-20):
-    the store manifest carries the producer's version, and a save from a
-    producer with a DIFFERENT version refuses loudly instead of silently
-    merging rows whose columns changed meaning."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from uncp_spark.fixtures import FixtureSpec, make_repos
-    from uncp_spark.operators.ingest import ingest
-    from uncp_spark.plans.registry import register_relation, save_relation
-    from uncp_spark.sources.checkpoint import read_manifest
-
-    files = ingest(make_repos(spark, FixtureSpec(n_repos=3, files_per_repo=3,
-                                                 seed=5)))
-
-    def producer(f):
-        return f.select(F.col("filename").alias("k"), F.col("size").alias("v"))
-
-    register_relation("ver_probe", "version probe", ["k", "v"], producer,
-                      version=1, merge_keys=["k"])
-    save_relation("ver_probe", files, tmpdir_path, "cfg", "scan1")
-    store = os.path.join(tmpdir_path, "ver_probe")
-    assert read_manifest(store)["relation_version"] == 1
-
-    # same name re-registered at version 2 (columns re-meaning'd)
-    register_relation("ver_probe", "version probe v2", ["k", "v"], producer,
-                      version=2, merge_keys=["k"])
-    with pytest.raises(ValueError, match="version"):
-        save_relation("ver_probe", files, tmpdir_path, "cfg", "scan2")
-    # the v1 store is untouched by the refused save
-    m = read_manifest(store)
-    assert m["relation_version"] == 1 and m["input_token"] == "scan1"
-
-    # back at the matching version, saves keep working
-    register_relation("ver_probe", "version probe", ["k", "v"], producer,
-                      version=1, merge_keys=["k"])
-    save_relation("ver_probe", files, tmpdir_path, "cfg", "scan3")
-    assert read_manifest(store)["input_token"] == "scan3"

@@ -15,13 +15,21 @@ Pipeline (SURVEY.md §7.1):
       → k-token shingle ids + one-permutation MinHash(128) + SimHash64
         + bottom-k sketch                       [one fused pandas UDF]
       → LSH banding self-join → candidate pairs [skew-capped hot buckets]
+        ∪ bottom-k sketch containment index
       → verify (est. Jaccard / Hamming / containment) → edges
       → connected components (large-star/small-star) → clusters
       → priority scores (bytes reclaimable, dup count, path depth)
 
+plus a suffix-array pass for exact substring containment
+(operators/containment.py). Beside this engine the package holds the
+dedup/upsert idioms and the text, ANN and multimodal functions the query
+entry point (``__spark_entry__``) calls. Every module is imported on the
+way from ``DedupPipeline.run``, the command surface, the ``--py-files``
+packaging seam or the query entry point (tests/test_reachability.py).
+
 Every stage checkpoints to Parquet with a manifest + per-partition
-metrics so a killed job resumes mid-pipeline (uncp's merge-on-save
-resumability, src/persist.rs:208-233, re-expressed).
+metrics so a killed job resumes mid-pipeline (uncp's atomic save,
+src/persist.rs:112-233, re-expressed).
 """
 
 from uncp_spark.config import SimilarityConfig

@@ -13,11 +13,7 @@ On a real cluster:
     spark-submit --master yarn --deploy-mode cluster \\
         --py-files uncp_spark.zip \\
         --conf spark.sql.shuffle.partitions=<executors*cores*2> \\
-        bench.py
-
-scripts/run_scaling.py uses exactly this launcher (local[N] master) for
-the N-vs-4N scaling evidence, so the measured job is the deployable
-artifact, not a dev-path import.
+        app.py
 """
 
 from __future__ import annotations

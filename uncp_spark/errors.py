@@ -6,12 +6,9 @@ The rebuild previously raised ad-hoc ``ValueError``/``RuntimeError``;
 these classes make the failure contract testable: a driver wrapping
 ``DedupPipeline.run`` / ``incremental_update`` can catch
 
-  CheckpointCorruptError   the persisted store is unreadable or a merge
-                           swap was interrupted beyond repair — resume
-                           from the previous stage / rebuild the store
-  VersionMismatchError     a registered relation's schema version does
-                           not match the persisted store — migrate or
-                           clear explicitly, never silently mix schemas
+  CheckpointCorruptError   a stage checkpoint is missing or its write
+                           never committed — resume from the previous
+                           stage / rebuild the stage
   ConfigMismatchError      a checkpoint chain was built under a
                            different SimilarityConfig — rerun batch (or
                            pass the original config); retrying with the
@@ -36,11 +33,6 @@ class CheckpointCorruptError(UncpSparkError, RuntimeError):
     left it unrecoverable (uncp PersistError parity)."""
 
 
-class VersionMismatchError(UncpSparkError, ValueError):
-    """A relation store's persisted schema version differs from the
-    registered producer's version (RelationKey::version parity)."""
-
-
 class ConfigMismatchError(UncpSparkError, ValueError):
     """A checkpoint chain was built under a different SimilarityConfig
     than the one this run supplies (signature spaces cannot mix)."""
@@ -54,7 +46,6 @@ class CancelledError(UncpSparkError, RuntimeError):
 __all__ = [
     "UncpSparkError",
     "CheckpointCorruptError",
-    "VersionMismatchError",
     "ConfigMismatchError",
     "CancelledError",
 ]

@@ -69,18 +69,22 @@ def _containment_pair_rows(
     cfg: SimilarityConfig,
     id_col: str = "file_id",
     entries: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, bool]:
     """→ (raw_pairs(src < dst) — ONE ROW PER SHARED SKETCH ID, i.e.
-    before the shared-count aggregation — and hot_shingle_report).
+    before the shared-count aggregation — hot_shingle_report, interned).
 
     Split out so ``combined_candidate_pairs`` can fold the
     ``containment_min_shared`` count into its cross-tier dedup groupBy
     (one exchange instead of two); ``containment_candidates`` keeps the
-    standalone aggregate for callers that want this tier alone."""
+    standalone aggregate for callers that want this tier alone.
+
+    When ``interned`` is True the pair ids are still ``binary(16)``
+    (lsh.intern_hex_id): the caller restores hex with ``extern_hex_id``
+    after its own (src, dst) exchange, or before a union with hex ids."""
     ent = entries if entries is not None else containment_entries(sigs, id_col)
     # shuffle-interior id interning (see lsh.intern_hex_id): the index
     # carries an id in every entry row and bucket array; binary(16)
-    # halves that vs the hex string. Hex in, hex out.
+    # halves that vs the hex string. Hex in; the caller externs.
     ent, interned = intern_hex_id(ent, "file_id")
     # pass 1 — bucket sizes only: count() partial-aggregates map-side,
     # so the exchange carries one row per DISTINCT shid, never the full
@@ -138,9 +142,7 @@ def _containment_pair_rows(
             F.col("dst.file_id").alias("dst"),
         )
     )
-    if interned:
-        raw = extern_hex_id(raw, "src", "dst")
-    return raw, hot_report
+    return raw, hot_report, interned
 
 
 def containment_candidates(
@@ -156,7 +158,10 @@ def containment_candidates(
     path restricts it to buckets touched by a delta. When given,
     ``sigs`` is unused (may be None).
     """
-    raw, hot_report = _containment_pair_rows(sigs, cfg, id_col, entries)
+    raw, hot_report, interned = _containment_pair_rows(
+        sigs, cfg, id_col, entries
+    )
+    # the (src, dst) exchange carries interned ids; hex only after it
     pairs = (
         raw.groupBy("src", "dst")
         .agg(F.count("*").alias("shared"))
@@ -169,9 +174,10 @@ def containment_candidates(
         # residual verification downstream. Measured at sf0.1/amplify=8:
         # 85k containment-only candidates → 44k.
         .filter(F.col("shared") >= cfg.containment_min_shared)
-        .select("src", "dst", F.lit(False).alias("from_hot_band"))
     )
-    return pairs, hot_report
+    if interned:
+        pairs = extern_hex_id(pairs, "src", "dst")
+    return pairs.select("src", "dst", F.lit(False).alias("from_hot_band")), hot_report
 
 
 def combined_candidate_pairs(
@@ -200,9 +206,11 @@ def combined_candidate_pairs(
     from uncp_spark.operators.lsh import candidate_pairs
 
     lsh_pairs, hot_bands = candidate_pairs(sigs, cfg, id_col=id_col, bands=bands)
-    cont_raw, hot_shingles = _containment_pair_rows(
+    cont_raw, hot_shingles, interned = _containment_pair_rows(
         sigs, cfg, id_col=id_col, entries=entries
     )
+    if interned:  # the band tier's pairs are hex
+        cont_raw = extern_hex_id(cont_raw, "src", "dst")
     u = lsh_pairs.select(
         "src", "dst", "from_hot_band",
         F.lit(True).alias("_band_tier"), F.lit(0).alias("_shared"),

@@ -9,8 +9,11 @@ variants (src/engine.rs:66-81) that had no lever in the rebuild:
                             untouched (delta-sized compute, asserted on
                             the returned delta report).
   ClearState              → ``clear_state``: explicitly retire a
-                            pipeline checkpoint directory — fresh-start
-                            semantics, loud instead of implicit.
+                            pipeline checkpoint directory (stage tables,
+                            the pairs stage's side tables, run reports
+                            and the delta path's swap leftovers) —
+                            fresh-start semantics, loud instead of
+                            implicit.
 
 The other variants already have homes: SetPath/Start/LoadCache are
 ``DedupPipeline.run`` arguments (resume reads the cache), Pause/Stop
@@ -39,7 +42,7 @@ _AUX_DIRS = [
     "_cc_checkpoints", "_cc_incr_checkpoints", "_metrics",
 ]
 _AUX_FILES = ["_incr_run.json", "_run.json"]
-_TMP_SUFFIXES = (".incr_tmp", ".incr_old", ".merge_tmp", ".merge_old")
+_TMP_SUFFIXES = (".incr_tmp", ".incr_old")
 
 
 def rescan_paths(
@@ -50,7 +53,6 @@ def rescan_paths(
     exclude: list[str] | None = None,
     repos: list[str] | None = None,
     cfg: SimilarityConfig | None = None,
-    scorer: str = "minhash_simhash_containment",
     input_token: str = "rescan",
     processed_at_ns: int | None = None,
 ) -> dict:
@@ -88,7 +90,6 @@ def rescan_paths(
         base_dir,
         current_repos,
         cfg=cfg,
-        scorer=scorer,
         input_token=input_token,
         processed_at_ns=processed_at_ns,
         force_keys=forced,

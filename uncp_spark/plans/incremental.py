@@ -71,7 +71,7 @@ from uncp_spark.operators.ingest import ingest
 from uncp_spark.operators.lsh import band_keys, candidate_pairs
 from uncp_spark.operators.priority import cluster_stats, priority_ranked
 from uncp_spark.operators.signatures import signature_table
-from uncp_spark.plans.registry import apply_scorer, get_scorer
+from uncp_spark.operators.verify import accept_edges, score_pairs
 from uncp_spark.sources import checkpoint as ckpt
 
 # identity columns of a signature row; everything else in the stored
@@ -127,7 +127,6 @@ def incremental_update(
     base_dir: str,
     current_repos: DataFrame,
     cfg: SimilarityConfig | None = None,
-    scorer: str = "minhash_simhash_containment",
     input_token: str = "incremental",
     processed_at_ns: int | None = None,
     force_keys: DataFrame | None = None,
@@ -491,15 +490,9 @@ def incremental_update(
 
     # ------------------------------- tier 4: edges (delta scoring only)
     with timed("edges"):
-        near_delta = apply_scorer(
-            get_scorer(scorer), pairs_delta, sigs_new, cfg, files=files_new
-        )
-        if "data" not in near_delta.columns:  # custom scorer, no evidence
-            near_delta = near_delta.withColumn(
-                "data", F.lit(None).cast("string")
-            )
-        near_delta = near_delta.select("src", "dst", "score", "edge_type",
-                                       "data")
+        near_delta = accept_edges(
+            score_pairs(pairs_delta, sigs_new, cfg, files_new), cfg
+        ).select("src", "dst", "score", "edge_type", "data")
         # exact-tier delta: each delta file links to its sha's new
         # representative; when the representative CHANGED (a smaller id
         # arrived, or the old rep died) a bridge edge keeps the old star
@@ -572,7 +565,7 @@ def incremental_update(
         delta_report["edges_delta"] = edges_delta.count()
         edges_new, tok_edges = write_stage(
             _drop_touching(edges_old, dead_ids).unionByName(edges_delta),
-            "edges", f"{tok_pairs}|{tok_sigs}|{tok_files}|scorer={scorer}",
+            "edges", f"{tok_pairs}|{tok_sigs}|{tok_files}",
         )
         try:
             from uncp_spark.operators.verify import release_scored_cache

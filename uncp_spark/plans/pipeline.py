@@ -11,12 +11,14 @@ X3 stage protocol (uncp ``SystemRunner``, src/systems/mod.rs:18-42): the
 stage list is DATA, not code — each ``StageSpec`` declares its name, its
 dependency stages (the analogue of ``can_run``'s dependency check) and a
 builder ``(spark, ctx) → DataFrame``. ``DedupPipeline(stages=[...])``
-accepts a custom graph; the default graph is:
+accepts a custom graph (a custom scorer is a replaced ``edges`` spec,
+``dataclasses.replace(spec, build=..., token_salt=...)``); the default
+graph is:
 
     files   = ingest(repos)                      sha256/size/depth
     sigs    = minhash+simhash(shingle(reps))     reps = 1 row per sha256
     pairs   = LSH candidates (+ hot-bucket report)
-    edges   = scorer(pairs) ∪ exact-tier star edges   (scorer = X1 registry)
+    edges   = verified near edges ∪ exact-tier star edges
     labels  = connected components
     clusters= priority-ranked cluster stats
 
@@ -34,24 +36,21 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.operators.components import connected_components, label_all
 from uncp_spark.operators.exact import exact_cluster_edges, exact_representatives
 from uncp_spark.operators.ingest import ingest
-from uncp_spark.operators.lsh import candidate_pairs
 from uncp_spark.operators.signatures import signature_table
 from uncp_spark.operators.priority import cluster_stats, priority_ranked, register_views
-
-from uncp_spark.plans.registry import apply_scorer, get_scorer
+from uncp_spark.operators.verify import accept_edges, score_pairs
 from uncp_spark.session import ensure_parallelism
 from uncp_spark.sources import checkpoint as ckpt
 
 # NO ``shingles`` column: the fat per-token arrays are the dominant
 # Arrow-transfer + checkpoint-write payload of the signature stage
 # (same order as the content itself — petabytes at 10^12 files) and
-# only residual verify candidates ever need them. The scorer recomputes
+# only residual verify candidates ever need them. Verify recomputes
 # them for exactly that set from content (signatures.shingle_sets,
 # bit-identical ids); the signature stage ships fixed-width columns only.
 SIG_COLS = ["file_id", "repo", "path", "lang", "size", "depth",
@@ -66,8 +65,9 @@ class StageSpec:
     name: str
     deps: tuple[str, ...]
     build: Callable[[SparkSession, dict], DataFrame]
-    # extra identity mixed into the stage's input token (e.g. the scorer
-    # name) so swapping a pluggable component invalidates the checkpoint
+    # extra identity mixed into the stage's input token, so a caller that
+    # swaps a stage's build invalidates its checkpoint (and everything
+    # downstream); the default graph sets none
     token_salt: str = ""
 
 
@@ -75,7 +75,6 @@ class StageSpec:
 class DedupPipeline:
     base_dir: str
     cfg: SimilarityConfig = field(default_factory=SimilarityConfig)
-    scorer: str = "minhash_simhash_containment"   # X1 registry key
     stages: list[StageSpec] | None = None
 
     def _stage_dir(self, name: str) -> str:
@@ -128,14 +127,11 @@ class DedupPipeline:
             return pairs
 
         def build_edges(spark, ctx):
-            near = apply_scorer(
-                get_scorer(self.scorer), ctx["pairs"], ctx["sigs"], cfg,
-                files=ctx["files"],
+            near = accept_edges(
+                score_pairs(ctx["pairs"], ctx["sigs"], cfg, ctx["files"]), cfg
             )
             exact = exact_cluster_edges(ctx["files"])
             cols = ["src", "dst", "score", "edge_type", "data"]
-            if "data" not in near.columns:  # custom scorer without evidence
-                near = near.withColumn("data", F.lit(None).cast("string"))
             return near.select(*cols).unionByName(exact.select(*cols))
 
         def build_labels(spark, ctx):
@@ -153,8 +149,7 @@ class DedupPipeline:
             StageSpec("files", (), build_files),
             StageSpec("sigs", ("files",), build_sigs),
             StageSpec("pairs", ("sigs",), build_pairs),
-            StageSpec("edges", ("pairs", "sigs", "files"), build_edges,
-                      token_salt=f"scorer={self.scorer}"),
+            StageSpec("edges", ("pairs", "sigs", "files"), build_edges),
             StageSpec("labels", ("edges",), build_labels),
             StageSpec("clusters", ("labels", "files"), build_clusters),
         ]
@@ -179,10 +174,14 @@ class DedupPipeline:
                 ckpt.StageResult(spec.name, path, m.get("rows", -1), 0.0, True, m)
             )
         else:
+            # the stage's seconds span its build AND its write: a build
+            # may run jobs of its own (the pairs stage writes its side
+            # tables) or eager work before the checkpoint write
+            t0 = time.monotonic()
             df = spec.build(spark, ctx)
-            results.append(
-                ckpt.write_checkpoint(df, path, spec.name, chash, input_token)
-            )
+            res = ckpt.write_checkpoint(df, path, spec.name, chash, input_token)
+            res.seconds = time.monotonic() - t0
+            results.append(res)
             df = ckpt.read_checkpoint(spark, path)
         return df, ckpt.manifest_token(path)
 

@@ -2,8 +2,7 @@
 
 Reference parity: uncp persists its state as Parquet with an atomic
 tmp-file + rename and a meta.json manifest (src/persist.rs:112-233,
-S4/S6 in SURVEY.md §2.1), merges on save for resumability
-(src/persist.rs:208-233, S7), and autosaves every ≥5 s so a killed run
+S4/S6 in SURVEY.md §2.1), and autosaves every ≥5 s so a killed run
 loses ≤5 s of work (src/engine.rs:449-461, T2).
 
 Spark-first re-expression: every pipeline stage writes its output as a
@@ -29,7 +28,6 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
 
@@ -159,73 +157,6 @@ def write_checkpoint(
         json.dump(manifest, f, indent=1)
     os.replace(tmp, _manifest_path(path))  # atomic rename, persist.rs:121-139 parity
     return StageResult(name, path, rows, seconds, resumed=False, manifest=manifest)
-
-
-def merge_checkpoint(
-    df: DataFrame,
-    path: str,
-    name: str,
-    config_hash: str,
-    input_token: str,
-    keys: list[str],
-    extra: dict | None = None,
-) -> StageResult:
-    """S7 merge-on-save for relation tables: union the new rows with the
-    existing checkpoint, NEW rows winning per ``keys`` and old-only keys
-    surviving — uncp's relation-store merge across saves
-    (src/relations.rs:285-293 via persist.rs:208-233), so repeated scans
-    accumulate the union of their relations instead of replacing them.
-
-    Written via a tmp sibling + rename swap: the merged plan READS
-    ``path``, so Spark cannot overwrite it in place. A crash between the
-    two renames leaves ``.merge_old`` as the only valid copy —
-    ``recover_merge_target`` (called here first) restores it, so the
-    accumulated store is never silently lost. NULL key values are
-    matched null-safely: a new null-keyed row REPLACES the old one
-    rather than duplicating it. At production scale this call is one
-    Iceberg ``MERGE INTO`` keyed on ``keys``."""
-    import functools
-    import shutil
-
-    recover_merge_target(path)
-    spark = df.sparkSession
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        old = spark.read.parquet(path).alias("_old")
-        new_keys = df.select(*keys).distinct().alias("_new")
-        cond = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(f"_old.{k}").eqNullSafe(F.col(f"_new.{k}")) for k in keys],
-        )
-        kept = old.join(new_keys, cond, "left_anti")
-        df = kept.unionByName(df)
-    tmp = path + ".merge_tmp"
-    res = write_checkpoint(df, tmp, name, config_hash, input_token, extra)
-    bak = path + ".merge_old"
-    shutil.rmtree(bak, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak, ignore_errors=True)
-    res.path = path
-    return res
-
-
-def recover_merge_target(path: str) -> None:
-    """Heal merge_checkpoint's two-rename swap after a crash
-    (idempotent): if the live dir is gone/invalid but ``.merge_old`` is
-    a complete checkpoint, restore it; if the swap completed and only
-    cleanup was lost, drop the backup."""
-    import shutil
-
-    bak = path + ".merge_old"
-    if not os.path.exists(bak):
-        return
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(bak, ignore_errors=True)
-    elif os.path.exists(os.path.join(bak, "_SUCCESS")):
-        if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
-        os.rename(bak, path)
 
 
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
