@@ -5,8 +5,8 @@ explicit state clearing (EngineCommand::ClearState).
 The scenario the scoped rescan exists for: a file's CONTENT changed but
 its commit fingerprint did not (history rewritten in place), so the
 trust-the-fingerprint incremental path correctly skips it — and the
-operator needs a lever to force exactly that subtree through the delta
-tiers without recomputing the corpus."""
+operator needs a lever to re-ingest exactly that subtree without
+re-signing the corpus."""
 
 from __future__ import annotations
 
@@ -63,7 +63,7 @@ def state(spark, tmp_path_factory):
     # snapshot NOW: the returned frames read the checkpoint dirs lazily,
     # and the rescan below swaps new state into those same dirs
     blind_membership = _membership(blind)
-    # the scoped command forces the target repo through the delta tiers
+    # the scoped command re-ingests the target repo
     rescan = rescan_paths(
         spark, base_a, _df(spark, ROWS_V2), repos=["orgT/t"],
         input_token="v2-rescan",
@@ -101,7 +101,7 @@ def test_rescan_paths_touches_only_the_scope(state):
     assert delta["files_ingested"] == 2 and delta["files_dead"] == 2
     # ... but ZERO signature UDF rows: a.txt's new sha is already known
     # (the dup pair's rep has its signature) and b.txt's unchanged sha
-    # rebinds — the whole rescan is pure-JVM joins
+    # reuses the signature stored under its retired row
     assert delta["sigs_fresh"] == 0
     assert delta["sigs_rebound"] == 1
 
@@ -137,11 +137,15 @@ def test_clear_state_removes_only_pipeline_entries(spark, state, tmp_path):
         spark, _df(spark, ROWS_V1), input_token="v1",
         register_sql_views=False, progress=False,
     )
+    incremental_update(spark, base, _df(spark, ROWS_V2), input_token="v2")
+    # what an interrupted update leaves behind
+    os.makedirs(os.path.join(base, "_incr_staging", "files"))
     foreign = os.path.join(base, "operator_notes.txt")
     with open(foreign, "w") as f:
         f.write("not pipeline state")
     res = clear_state(base)
     assert "files" in res["removed"] and "clusters" in res["removed"]
+    assert "_incr_staging" in res["removed"]
     assert res["kept"] == ["operator_notes.txt"]
     assert os.path.exists(foreign)
     assert not os.path.exists(os.path.join(base, "files"))

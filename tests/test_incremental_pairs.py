@@ -1,27 +1,31 @@
-"""Incremental pair/cluster maintenance vs full recompute.
+"""Incremental update vs full recompute.
 
-The 100 TB daily-delta contract (plans/incremental.py): after merging a
+The daily-delta contract (plans/incremental.py): after merging a
 snapshot that adds a near-dup, adds an exact copy, changes a file, and
-deletes a group representative, the final clusters must EQUAL a full
-batch recompute on the new snapshot, while the expensive tiers touch
-only the delta (asserted on the run report's ``delta`` counters).
+deletes a group representative, every table after ``files`` must EQUAL
+a full batch recompute on the new snapshot, while ingest and the
+signature UDF touch only the delta (asserted on the run report's
+``delta`` counters).
 
 Reference anchor: uncp's only-changed-files contract
-(src/detector.rs:783-885, merge-on-save src/persist.rs:208-233),
-extended here to the pair/cluster tiers the reference never built.
+(src/detector.rs:783-885, merge-on-save src/persist.rs:208-233).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from uncp_spark.errors import CheckpointCorruptError
 from uncp_spark.fixtures import REPOS_SCHEMA, FixtureSpec, generate_repos_rows
-from uncp_spark.plans.incremental import incremental_update
+from uncp_spark.plans import pipeline
+from uncp_spark.plans.incremental import STAGES, incremental_update
 from uncp_spark.plans.pipeline import DedupPipeline
+from uncp_spark.sources import checkpoint as ckpt
 
 SPEC = FixtureSpec(n_repos=12, files_per_repo=8, seed=42)
 
@@ -106,7 +110,7 @@ def incr_state(spark, tmp_path_factory):
         spark, v2, input_token="v2", register_sql_views=False
     )
     return {
-        "base_a": base_a, "v2": v2, "expect": expect,
+        "base_a": base_a, "base_b": base_b, "v2": v2, "expect": expect,
         "full_v1": full_v1, "incr": incr, "full_v2": full_v2,
     }
 
@@ -124,9 +128,22 @@ def _cluster_rows(out) -> list[tuple]:
     return sorted(tuple(r) for r in out["clusters"].select(*cols).collect())
 
 
+def _rows(df) -> list[str]:
+    cols = sorted(df.columns)
+    return sorted(str(tuple(r)) for r in df.select(*cols).collect())
+
+
+def _assert_tables_equal(incr, full) -> None:
+    """Every table a batch run derives from ``files`` matches, row for
+    row (``files`` itself differs in the kept rows' processed_at)."""
+    for name in ("sigs", "pairs", "edges", "labels", "clusters"):
+        assert _rows(incr[name]) == _rows(full[name]), name
+
+
 def test_incremental_clusters_equal_full_recompute(incr_state):
     assert _membership(incr_state["incr"]) == _membership(incr_state["full_v2"])
     assert _cluster_rows(incr_state["incr"]) == _cluster_rows(incr_state["full_v2"])
+    _assert_tables_equal(incr_state["incr"], incr_state["full_v2"])
 
 
 def test_incremental_touches_only_the_delta(incr_state):
@@ -137,14 +154,8 @@ def test_incremental_touches_only_the_delta(incr_state):
     assert delta["sigs_rebound"] == expect["rebound"]
     assert delta["files_ingested"] == expect["ingested"]
     assert delta["files_dead"] == expect["dead"]
-    # pair scoring and CC are bounded by the delta, not the corpus
-    full_stats = {
-        s["stage"]: s["rows"] for s in incr_state["full_v2"]["report"]["stages"]
-    }
-    assert 0 < delta["pairs_delta"] < full_stats["pairs"]
-    assert 0 < delta["cc_affected_nodes"] < full_stats["labels"]
     # the persisted delta metrics match the in-memory report
-    with open(os.path.join(incr_state["base_a"], "_incr_run.json")) as f:
+    with open(os.path.join(incr_state["base_a"], "_run.json")) as f:
         assert json.load(f)["delta"] == delta
 
 
@@ -213,10 +224,9 @@ def test_delete_rep_with_multiple_survivors_keeps_cluster(spark, tmp_path):
 
 def test_delete_hot_bucket_star_center_keeps_cluster(spark, tmp_path):
     """Hot-bucket pairs are a star through the bucket's min-id member.
-    Deleting that CENTER kills every star edge via _drop_touching; the
-    bucket must be treated as affected (it lost a member) so survivors
-    are re-grouped and re-starred onto the new min — otherwise they
-    shatter into singletons while a full recompute keeps them together."""
+    Deleting that CENTER must re-star the survivors onto the new min —
+    otherwise they shatter into singletons while a full recompute keeps
+    them together."""
     from uncp_spark.config import SimilarityConfig
 
     cfg = SimilarityConfig(hot_band_cap=2)
@@ -341,3 +351,70 @@ def test_incremental_dead_files_fully_retired(incr_state):
         ).collect()
     }
     assert edge_ids <= live_ids
+
+
+def test_incremental_refuses_mixed_checkpoint(spark, tmp_path, incr_state):
+    """``files`` from one run beside ``sigs`` from another (a crash
+    between two promotions, or a copied directory) would join old
+    signatures to the new shas by file_id; the update refuses it."""
+    mixed = str(tmp_path / "mixed")
+    shutil.copytree(incr_state["base_a"], mixed)
+    shutil.rmtree(os.path.join(mixed, "files"))
+    shutil.copytree(
+        os.path.join(incr_state["base_b"], "files"), os.path.join(mixed, "files")
+    )
+    with pytest.raises(CheckpointCorruptError, match="not built from"):
+        incremental_update(spark, mixed, incr_state["v2"], input_token="mixed")
+
+
+def test_killed_update_keeps_previous_checkpoint(spark, tmp_path, monkeypatch):
+    """An update killed in a late stage leaves every stage of the
+    previous checkpoint in place (a batch resume skips all six), and a
+    retried update equals a batch run."""
+    rows = [
+        (f"org{i}/p", "same.txt", "c1", "text",
+         "identical shared content " * 40, "exact", 1)
+        for i in range(3)
+    ] + [
+        (f"orgu{i}/p", f"u{i}.txt", "c1", "text",
+         f"unrelated text number {i} " * 30, "unique", -1)
+        for i in range(2)
+    ]
+    v2_rows = rows[1:] + [
+        ("orgN/p", "near.txt", "c1", "text",
+         "unrelated text number 0 " * 30 + "and a new tail", "near", 2)
+    ]
+    base_a = str(tmp_path / "a")
+    base_b = str(tmp_path / "b")
+    DedupPipeline(base_dir=base_a).run(
+        spark, _tiny_corpus(spark, rows), input_token="v1",
+        register_sql_views=False, progress=False,
+    )
+    before = {s: ckpt.read_manifest(os.path.join(base_a, s)) for s in STAGES}
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed in the labels stage")
+
+    monkeypatch.setattr(pipeline, "connected_components", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        incremental_update(
+            spark, base_a, _tiny_corpus(spark, v2_rows), input_token="v2"
+        )
+    monkeypatch.undo()
+    assert {
+        s: ckpt.read_manifest(os.path.join(base_a, s)) for s in STAGES
+    } == before
+    resumed = DedupPipeline(base_dir=base_a).run(
+        spark, _tiny_corpus(spark, rows), input_token="v1",
+        register_sql_views=False, progress=False,
+    )
+    assert all(s["resumed"] for s in resumed["report"]["stages"])
+
+    incr = incremental_update(
+        spark, base_a, _tiny_corpus(spark, v2_rows), input_token="v2"
+    )
+    full = DedupPipeline(base_dir=base_b).run(
+        spark, _tiny_corpus(spark, v2_rows), input_token="v2",
+        register_sql_views=False, progress=False,
+    )
+    _assert_tables_equal(incr, full)

@@ -47,7 +47,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uncp_spark.config import SimilarityConfig
-from uncp_spark.operators.lsh import _explode_pairs, extern_hex_id, intern_hex_id
+from uncp_spark.operators.lsh import (
+    _explode_pairs,
+    candidate_pairs,
+    extern_hex_id,
+    intern_hex_id,
+)
 
 
 def containment_entries(sigs: DataFrame, id_col: str = "file_id") -> DataFrame:
@@ -65,10 +70,9 @@ def containment_entries(sigs: DataFrame, id_col: str = "file_id") -> DataFrame:
 
 
 def _containment_pair_rows(
-    sigs: DataFrame | None,
+    sigs: DataFrame,
     cfg: SimilarityConfig,
     id_col: str = "file_id",
-    entries: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, bool]:
     """→ (raw_pairs(src < dst) — ONE ROW PER SHARED SKETCH ID, i.e.
     before the shared-count aggregation — hot_shingle_report, interned).
@@ -81,7 +85,7 @@ def _containment_pair_rows(
     When ``interned`` is True the pair ids are still ``binary(16)``
     (lsh.intern_hex_id): the caller restores hex with ``extern_hex_id``
     after its own (src, dst) exchange, or before a union with hex ids."""
-    ent = entries if entries is not None else containment_entries(sigs, id_col)
+    ent = containment_entries(sigs, id_col)
     # shuffle-interior id interning (see lsh.intern_hex_id): the index
     # carries an id in every entry row and bucket array; binary(16)
     # halves that vs the hex string. Hex in; the caller externs.
@@ -146,21 +150,12 @@ def _containment_pair_rows(
 
 
 def containment_candidates(
-    sigs: DataFrame | None,
+    sigs: DataFrame,
     cfg: SimilarityConfig,
     id_col: str = "file_id",
-    entries: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """→ (pairs(src < dst, from_hot_band=False), hot_shingle_report).
-
-    ``entries``: optional precomputed/persisted (shid, file_id) table —
-    the batch pipeline passes its checkpointed index and the incremental
-    path restricts it to buckets touched by a delta. When given,
-    ``sigs`` is unused (may be None).
-    """
-    raw, hot_report, interned = _containment_pair_rows(
-        sigs, cfg, id_col, entries
-    )
+    """→ (pairs(src < dst, from_hot_band=False), hot_shingle_report)."""
+    raw, hot_report, interned = _containment_pair_rows(sigs, cfg, id_col)
     # the (src, dst) exchange carries interned ids; hex only after it
     pairs = (
         raw.groupBy("src", "dst")
@@ -181,11 +176,9 @@ def containment_candidates(
 
 
 def combined_candidate_pairs(
-    sigs: DataFrame | None,
+    sigs: DataFrame,
     cfg: SimilarityConfig,
     id_col: str = "file_id",
-    bands: DataFrame | None = None,
-    entries: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """LSH band candidates ∪ containment-sketch candidates, deduped →
     (pairs(src, dst, from_hot_band), hot_band_report, hot_shingle_report).
@@ -203,11 +196,9 @@ def combined_candidate_pairs(
     (measured ~1 s at the 40k bench corpus). A pair is kept iff the
     band tier proposed it OR it shares ≥ min_shared sketch ids — exactly
     the union of the two tiers' standalone outputs."""
-    from uncp_spark.operators.lsh import candidate_pairs
-
-    lsh_pairs, hot_bands = candidate_pairs(sigs, cfg, id_col=id_col, bands=bands)
+    lsh_pairs, hot_bands = candidate_pairs(sigs, cfg, id_col=id_col)
     cont_raw, hot_shingles, interned = _containment_pair_rows(
-        sigs, cfg, id_col=id_col, entries=entries
+        sigs, cfg, id_col=id_col
     )
     if interned:  # the band tier's pairs are hex
         cont_raw = extern_hex_id(cont_raw, "src", "dst")

@@ -97,23 +97,16 @@ def _explode_pairs(bucket_df: DataFrame, ids_col: str = "ids",
 
 
 def candidate_pairs(
-    sigs: DataFrame | None,
+    sigs: DataFrame,
     cfg: SimilarityConfig,
     id_col: str = "file_id",
-    bands: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (pairs(src < dst), hot_bucket_report).
 
     pairs carries ``from_hot_band`` so downstream metrics can separate
     full-fidelity candidates from degraded hot-bucket stars.
-
-    ``bands``: optional precomputed/persisted band-key table
-    (file_id, band, band_hash) — the incremental path restricts this to
-    buckets touched by a delta, and the batch pipeline passes its
-    checkpointed band table so band keys are computed once per corpus.
-    When given, ``sigs`` is unused (may be None).
     """
-    bk = bands if bands is not None else band_keys(sigs, cfg, id_col=id_col)
+    bk = band_keys(sigs, cfg, id_col=id_col)
     # shuffle-interior id interning: every exchange below carries ids in
     # every row (bucket arrays, pair rows); 16-byte binary halves that
     # payload vs the 32-char hex string and compares faster. Checkpoint

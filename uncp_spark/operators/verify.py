@@ -241,10 +241,11 @@ def score_pairs(
         # output branches AND (via `need`) by the shingle recompute, so
         # its subtree — phase 1, two sketch joins, 2×(m+1) literal
         # lookup arrays — would be copied ~6× into the final union. Over
-        # a caller with deep lineage (the incremental path unions old +
-        # delta signatures) that multiplied the plan tree past 2 GB of
-        # tree-string and hung Catalyst. localCheckpoint truncates the
-        # plan to an RDD leaf (same trade as connected-components: blocks
+        # inputs with deep lineage (signatures unioned from several
+        # un-checkpointed frames rather than read from one checkpoint)
+        # that multiplied the plan tree past 2 GB of tree-string and
+        # hung Catalyst. localCheckpoint truncates the plan to an RDD
+        # leaf (same trade as connected-components: blocks
         # pinned to executors, not fault-tolerant — acceptable inside one
         # stage of a pipeline that checkpoints every stage to parquet).
         # LAZY (eager=False): the Dataset is wrapped in a LogicalRDD at

@@ -2,16 +2,17 @@
 variants (src/engine.rs:66-81) that had no lever in the rebuild:
 
   SetPathFilter + Start   → ``rescan_paths``: scoped invalidation — the
-                            files under a glob filter are re-processed
-                            through the delta tiers (plans/incremental)
-                            even when their commit fingerprints are
-                            unchanged; everything outside the filter is
-                            untouched (delta-sized compute, asserted on
-                            the returned delta report).
+                            files under a glob filter are re-ingested
+                            and re-signed by an incremental update
+                            (plans/incremental) even when their commit
+                            fingerprints are unchanged; every file
+                            outside the filter keeps its row and its
+                            signature (asserted on the returned delta
+                            report).
   ClearState              → ``clear_state``: explicitly retire a
                             pipeline checkpoint directory (stage tables,
-                            the pairs stage's side tables, run reports
-                            and the delta path's swap leftovers) —
+                            the pairs stage's skew reports, run reports
+                            and an interrupted update's staging area) —
                             fresh-start semantics, loud instead of
                             implicit.
 
@@ -32,17 +33,13 @@ from pyspark.sql import functions as F
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.errors import CheckpointCorruptError
 from uncp_spark.functions.globs import path_glob_filter
-from uncp_spark.plans.incremental import STAGES, incremental_update
+from uncp_spark.plans.incremental import STAGES, STAGING, incremental_update
 from uncp_spark.sources import checkpoint as ckpt
 
 # everything a pipeline run / incremental update may leave under
 # base_dir besides the STAGES themselves
-_AUX_DIRS = [
-    "bands", "cindex", "hot_buckets", "hot_shingles",
-    "_cc_checkpoints", "_cc_incr_checkpoints", "_metrics",
-]
-_AUX_FILES = ["_incr_run.json", "_run.json"]
-_TMP_SUFFIXES = (".incr_tmp", ".incr_old")
+_AUX_DIRS = ["hot_buckets", "hot_shingles", "_cc_checkpoints", "_metrics", STAGING]
+_AUX_FILES = ["_run.json"]
 
 
 def rescan_paths(
@@ -63,11 +60,11 @@ def rescan_paths(
     trusts (uncp trusts stat metadata the same way, detector.rs:783-885)
     — this is the command for when that trust is wrong for a known
     subtree (a repo rewrote history in place, an ingest bug corrupted
-    one prefix): the matched files are forced through the delta tiers —
-    re-ingested, re-signed (or sha-rebound), re-paired in only the
-    buckets they touch, re-clustered in only the components they touch.
-    With no filter every current file is forced: a full logical rebuild
-    that still reuses signature work via sha rebinding.
+    one prefix): the matched files are re-ingested and their signatures
+    re-derived (reused by sha when the content is already known), and
+    the stages after ``sigs`` rebuild as in a batch run. With no filter
+    every current file is forced: a full logical rebuild that still
+    reuses signature work by sha.
 
     Returns ``incremental_update``'s output dict; ``report["delta"]``
     carries the scoped-work proof (files_ingested == matched files) and
@@ -126,13 +123,7 @@ def clear_state(base_dir: str) -> dict:
     removed, kept = [], []
     for entry in sorted(os.listdir(base_dir)):
         full = os.path.join(base_dir, entry)
-        recognized = (
-            entry in STAGES
-            or entry in _AUX_DIRS
-            or entry in _AUX_FILES
-            or entry.endswith(_TMP_SUFFIXES)
-        )
-        if not recognized:
+        if entry not in STAGES and entry not in _AUX_DIRS and entry not in _AUX_FILES:
             kept.append(entry)
             continue
         if os.path.isdir(full):

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.operators.components import connected_components, label_all
+from uncp_spark.operators.containment_index import combined_candidate_pairs
 from uncp_spark.operators.exact import exact_cluster_edges, exact_representatives
 from uncp_spark.operators.ingest import ingest
 from uncp_spark.operators.signatures import signature_table
@@ -95,30 +96,7 @@ class DedupPipeline:
             ).select(*SIG_COLS)
 
         def build_pairs(spark, ctx):
-            # band table + containment index persisted alongside the
-            # pairs stage: computed ONCE per corpus, read back
-            # column-pruned for pair generation, and the substrate the
-            # incremental path (plans/incremental.py) joins delta
-            # signatures against — a daily delta touches only the
-            # buckets its band keys / sketch ids hit, instead of
-            # re-banding or re-indexing the whole corpus.
-            from uncp_spark.operators.containment_index import (
-                combined_candidate_pairs,
-                containment_entries,
-            )
-            from uncp_spark.operators.lsh import band_keys
-
-            bk_path = self._stage_dir("bands")
-            band_keys(ctx["sigs"], cfg).write.mode("overwrite").parquet(bk_path)
-            bands = spark.read.parquet(bk_path)
-            ci_path = self._stage_dir("cindex")
-            containment_entries(ctx["sigs"]).write.mode("overwrite").parquet(
-                ci_path
-            )
-            entries = spark.read.parquet(ci_path)
-            pairs, hot_b, hot_s = combined_candidate_pairs(
-                None, cfg, bands=bands, entries=entries
-            )
+            pairs, hot_b, hot_s = combined_candidate_pairs(ctx["sigs"], cfg)
             # skew reports persisted alongside (observability — no
             # silent caps): quarantined LSH buckets + dropped
             # boilerplate-shingle index buckets
@@ -175,8 +153,8 @@ class DedupPipeline:
             )
         else:
             # the stage's seconds span its build AND its write: a build
-            # may run jobs of its own (the pairs stage writes its side
-            # tables) or eager work before the checkpoint write
+            # may run jobs of its own (the pairs stage writes its skew
+            # reports) or eager work before the checkpoint write
             t0 = time.monotonic()
             df = spec.build(spark, ctx)
             res = ckpt.write_checkpoint(df, path, spec.name, chash, input_token)
