@@ -24,10 +24,8 @@ from pyspark.sql import functions as F
 
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.fixtures import REPOS_FROM_DOCUMENTS_DUCKDB, repos_from_documents
-from uncp_spark.functions.similarity_search import cosine_topk
 from uncp_spark.functions.text import lang_id, quality_score, token_count, fingerprint64
 from uncp_spark.operators.components import connected_components, label_all
-from uncp_spark.operators.containment import substring_containment
 from uncp_spark.operators.dedup import dedup_keep_last
 from uncp_spark.operators.exact import (
     exact_cluster_edges,
@@ -411,30 +409,6 @@ def q_cc_bruteforce(spark, sf_dir):
     )
 
 
-def q_embedding_cosine_pairs(spark, sf_dir):
-    """Brute-force embedding-cosine near-dup pairs (exact baseline; the
-    scale path is multi-table RP-LSH in functions/similarity_search).
-    Corpus capped at vec_id < 4096 on both sides (mirrored in the
-    oracle) so the quadratic baseline is bounded at any sf — a larger-sf
-    driver run can never detonate it into >8M comparisons."""
-    from uncp_spark.functions.similarity_search import cosine_similarity_col
-
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") < 4096)
-        .withColumn("embedding", F.transform("embedding", lambda x: x.cast("double")))
-    )
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cosine_similarity_col(F.col("va"), F.col("vb")), 4))
-        .filter(F.col("cosine") >= 0.35)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def q_lsh_recall_vs_bruteforce(spark, sf_dir):
     """LSH banding recall vs brute-force shingle Jaccard (J3 oracle).
 
@@ -487,98 +461,6 @@ def q_lsh_recall_vs_bruteforce(spark, sf_dir):
         .withColumn("jaccard", F.round(inter / union, 4))
         .filter(F.col("jaccard") >= 0.75)
         .select("sha_a", "sha_b", "jaccard")
-    )
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = cosine_topk(emb, queries, k=4)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cosine_r"), "rank"
-    )
-
-
-def q_ann_lsh_recall(spark, sf_dir):
-    """RP-LSH recall gate at the pinned scale params (bits=12, tables=8).
-
-    The synthetic embeddings have no organic high-cosine pairs (max
-    ≈ 0.5), so the query plants them SQL-expressibly: each vector gets a
-    rotation-perturbed twin v' = v + 0.05·rot(v) (cos(v, v') ≈ 0.9988,
-    id + 100000). Spark finds near-dup pairs (cos ≥ 0.95) via the
-    *bucketed* multi-table RP-LSH path (similarity_search.ann_topk —
-    equi-join on (table, bucket), never the cross join); the DuckDB
-    oracle computes the exact cos ≥ 0.95 pair set over the same
-    augmented corpus. At cos 0.9988 the per-pair miss probability is
-    (1 - (1-θ/π)^12)^8 ≈ 8e-7, so the row sets match iff LSH recall is
-    1.0 — the hash match IS the recall gate, with organic 0.5-cos pairs
-    correctly below threshold on both sides."""
-    from uncp_spark.functions.similarity_search import embedding_near_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    rot = F.concat(
-        F.expr("slice(embedding, 2, size(embedding) - 1)"),
-        F.slice("embedding", 1, 1),
-    )
-    pert = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.zip_with("embedding", rot, lambda x, y: x + F.lit(0.05) * y).alias(
-            "embedding"
-        ),
-    )
-    aug = emb.unionByName(pert)
-    pairs = embedding_near_dup_pairs(
-        aug, dim=64, threshold=0.95, bits=12, tables=8, seed=42
-    )
-    return pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine_r"))
-
-
-def q_containment_pairs(spark, sf_dir):
-    """F17 oracle: exact substring containment over distinct contents,
-    via the suffix-array kernel (functions/suffix.py) inside the
-    substring_containment operator. The corpus fork fixture plants true
-    containments (fork = original + appended tail), so the result is
-    non-trivial. Both sides cap the content set to the first 400 by
-    sha256 order — deterministic and mirrored in the oracle — so the
-    quadratic candidate set is bounded at any sf (the scale path runs
-    the same kernel on LSH candidates only, see substring_containment).
-    Reference anchor: uncp DESIGN.md:231-258 content-aware tier."""
-    from pyspark.sql import Window
-
-    files = _files(spark, sf_dir)
-    reps = (
-        files.dropDuplicates(["sha256"])
-        .select("file_id", "sha256", "content")
-        .withColumn("_rk", F.row_number().over(Window.orderBy("sha256")))
-        .filter(F.col("_rk") <= 400)
-        .drop("_rk")
-    )
-    norm = F.trim(F.regexp_replace(F.lower(F.col("content")), r"\s+", " "))
-    texts = reps.select("file_id", "sha256", norm.alias("norm_text"))
-    a = texts.select(
-        F.col("file_id").alias("src"),
-        F.col("sha256").alias("sha_a"),
-        F.length("norm_text").alias("len_a"),
-    )
-    b = texts.select(
-        F.col("file_id").alias("dst"),
-        F.col("sha256").alias("sha_b"),
-        F.length("norm_text").alias("len_b"),
-    )
-    cand = a.crossJoin(b).filter(F.col("len_a") < F.col("len_b"))
-    verdicts = substring_containment(cand.select("src", "dst"), texts)
-    return (
-        verdicts.filter(F.col("substr_contained"))
-        .join(a.select("src", "sha_a"), "src")
-        .join(b.select("dst", "sha_b"), "dst")
-        .select("sha_a", "sha_b")
     )
 
 
@@ -729,13 +611,6 @@ def q_near_dup_priority(spark, sf_dir):
     return stats.withColumn("priority_rank", F.row_number().over(w))
 
 
-def q_substring_containment(spark, sf_dir):
-    files = _files(spark, sf_dir)
-    sigs = _sigs(files)
-    pairs, _ = candidate_pairs(sigs, CFG)
-    return substring_containment(pairs, sigs)
-
-
 def q_language_id(spark, sf_dir):
     """Marker-set language ID (functions/text.py) — oracle-checked: the
     DuckDB side recomputes per-language stopword hits and takes the same
@@ -766,13 +641,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_stats_by_lang": q_token_stats_by_lang,
         "media_metadata": q_media_metadata,
         "media_dimensions": q_media_dimensions,
-        "ann_cosine_topk": q_ann_cosine_topk,
         "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "embedding_cosine_pairs": q_embedding_cosine_pairs,
         "lsh_recall_vs_bruteforce": q_lsh_recall_vs_bruteforce,
-        "ann_lsh_recall": q_ann_lsh_recall,
         "cc_bruteforce": q_cc_bruteforce,
-        "containment_pairs": q_containment_pairs,
         "shingle_stats": q_shingle_stats,
         "fingerprint_cardinality": q_fingerprint_cardinality,
         "language_id": q_language_id,
@@ -783,10 +654,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # signature internals (rows-only: MinHash estimates / LSH band
         # hashes are not ANSI-SQL-expressible; their kernels are
         # oracle-checked via lsh_recall_vs_bruteforce, cc_bruteforce,
-        # containment_pairs, shingle_stats, near_dup_clusters instead)
+        # shingle_stats, near_dup_clusters instead)
         "minhash_signatures": q_minhash_signatures,
         "lsh_candidate_pairs": q_lsh_candidate_pairs,
-        "substring_containment": q_substring_containment,
     }
 
 
@@ -1084,33 +954,6 @@ def oracle_sql() -> dict[str, str]:
             FROM toks a CROSS JOIN toks b
             WHERE a.doc_id < b.doc_id AND jaccard >= 0.8
         """,
-        "embedding_cosine_pairs": """
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(
-                     a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cosine
-            FROM embeddings a CROSS JOIN embeddings b
-            WHERE a.vec_id < b.vec_id AND cosine >= 0.35
-              AND a.vec_id < 4096 AND b.vec_id < 4096
-        """,
-        "ann_lsh_recall": """
-            WITH e AS (
-              SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-            ), p AS (
-              SELECT vec_id + 100000 AS vec_id,
-                     list_transform(
-                       list_zip(v, list_concat(v[2:], [v[1]])),
-                       x -> x[1] + 0.05 * x[2]
-                     ) AS v
-              FROM e
-            ), aug AS (
-              SELECT * FROM e UNION ALL SELECT * FROM p
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(round(list_cosine_similarity(a.v, b.v), 6), 4)
-                     AS cosine_r
-            FROM aug a JOIN aug b ON a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.95
-        """,
         "cc_bruteforce": """
             WITH RECURSIVE toks AS (
               SELECT doc_id,
@@ -1135,19 +978,6 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT src AS doc_id, min(dst) AS cluster_id
             FROM reach GROUP BY src
-        """,
-        "containment_pairs": f"""
-            {_REPOS},
-            contents AS (
-              SELECT sha256(content) AS sha,
-                     trim(regexp_replace(lower(content), '\\s+', ' ', 'g')) AS norm
-              FROM (SELECT DISTINCT content FROM repos)
-              QUALIFY row_number() OVER (ORDER BY sha) <= 400
-            )
-            SELECT a.sha AS sha_a, b.sha AS sha_b
-            FROM contents a CROSS JOIN contents b
-            WHERE strlen(a.norm) < strlen(b.norm)
-              AND contains(b.norm, a.norm)
         """,
         "shingle_stats": f"""
             {_REPOS},
@@ -1271,21 +1101,5 @@ def oracle_sql() -> dict[str, str]:
                               min_depth ASC, cluster_key ASC
                    )::INT AS priority_rank
             FROM stats
-        """,
-        "ann_cosine_topk": """
-            WITH q AS (
-              SELECT vec_id AS query_id, embedding AS qv
-              FROM embeddings WHERE vec_id < 5
-            ), scored AS (
-              SELECT q.query_id, e.vec_id,
-                     round(list_cosine_similarity(
-                       e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS cos6
-              FROM embeddings e CROSS JOIN q
-            )
-            SELECT query_id, vec_id, round(cos6, 4) AS cosine_r,
-                   row_number() OVER (
-                     PARTITION BY query_id ORDER BY cos6 DESC, vec_id ASC
-                   )::INT AS rank
-            FROM scored QUALIFY rank <= 4
         """,
     }

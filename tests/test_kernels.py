@@ -10,16 +10,14 @@ from __future__ import annotations
 import random
 
 import numpy as np
-import pytest
 
-from uncp_spark.config import SimilarityConfig
+from uncp_spark.config import MINHASH_PRIME, SimilarityConfig
 from uncp_spark.functions.kernels import (
     est_jaccard,
     minhash_params,
     oph_minhash_batch,
     simhash_batch,
 )
-from uncp_spark.functions.suffix import SuffixIndex, suffix_array
 
 CFG = SimilarityConfig()
 
@@ -38,11 +36,11 @@ def test_minhash_deterministic():
     assert np.array_equal(a, a2) and np.array_equal(b, b2)
     rng = random.Random(7)
     s = _rand_set(rng, 100)
-    sig1 = oph_minhash_batch([s], a, b, CFG.prime, CFG.num_perm)
-    sig2 = oph_minhash_batch([s.copy()], a2, b2, CFG.prime, CFG.num_perm)
+    sig1 = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
+    sig2 = oph_minhash_batch([s.copy()], a2, b2, MINHASH_PRIME, CFG.num_perm)
     assert np.array_equal(sig1, sig2)
     a3, b3 = minhash_params(SimilarityConfig(seed=CFG.seed + 1))
-    sig3 = oph_minhash_batch([s], a3, b3, CFG.prime, CFG.num_perm)
+    sig3 = oph_minhash_batch([s], a3, b3, MINHASH_PRIME, CFG.num_perm)
     assert not np.array_equal(sig1, sig3)
 
 
@@ -51,15 +49,15 @@ def test_minhash_identical_sets_identical_sigs():
     rng = random.Random(3)
     s = _rand_set(rng, 200)
     sigs = oph_minhash_batch(
-        [s, np.random.default_rng(0).permutation(s)], a, b, CFG.prime, CFG.num_perm
+        [s, np.random.default_rng(0).permutation(s)], a, b, MINHASH_PRIME, CFG.num_perm
     )
     assert np.array_equal(sigs[0], sigs[1])  # order-invariant (set semantics)
 
 
 def test_minhash_empty_set_sentinel():
     a, b = minhash_params(CFG)
-    sigs = oph_minhash_batch([np.empty(0, np.int64)], a, b, CFG.prime, CFG.num_perm)
-    assert (sigs == CFG.prime * CFG.num_perm).all()
+    sigs = oph_minhash_batch([np.empty(0, np.int64)], a, b, MINHASH_PRIME, CFG.num_perm)
+    assert (sigs == MINHASH_PRIME * CFG.num_perm).all()
 
 
 def test_minhash_estimates_jaccard():
@@ -73,7 +71,7 @@ def test_minhash_estimates_jaccard():
         keep = int(len(base) * frac)
         other = np.unique(np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)]))
         true_j = len(np.intersect1d(base, other)) / len(np.union1d(base, other))
-        sigs = oph_minhash_batch([base, other], a, b, CFG.prime, CFG.num_perm)
+        sigs = oph_minhash_batch([base, other], a, b, MINHASH_PRIME, CFG.num_perm)
         est = est_jaccard(sigs[0], sigs[1])
         assert abs(est - true_j) < 0.14, (frac, true_j, est)
 
@@ -85,9 +83,9 @@ def test_minhash_batch_matches_single_rows():
     rng = random.Random(5)
     sets = [_rand_set(rng, rng.randint(1, 60)) for _ in range(9)]
     sets.insert(3, np.empty(0, np.int64))  # empty row mid-batch
-    batched = oph_minhash_batch(sets, a, b, CFG.prime, CFG.num_perm)
+    batched = oph_minhash_batch(sets, a, b, MINHASH_PRIME, CFG.num_perm)
     for i, s in enumerate(sets):
-        single = oph_minhash_batch([s], a, b, CFG.prime, CFG.num_perm)
+        single = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
         assert np.array_equal(batched[i], single[0]), i
 
 
@@ -116,32 +114,6 @@ def test_simhash_batch_matches_single_rows():
     batched = simhash_batch(sets)
     for i, s in enumerate(sets):
         assert simhash_batch([s])[0] == batched[i], i
-
-
-@pytest.mark.parametrize("text", ["", "a", "banana", "abracadabra" * 3,
-                                  "the quick brown fox jumps over the lazy dog"])
-def test_suffix_array_sorted(text):
-    sa = suffix_array(text)
-    data = text.encode()
-    suffixes = [data[i:] for i in sa]
-    assert suffixes == sorted(data[i:] for i in range(len(data)))
-
-
-def test_suffix_index_contains_oracle():
-    rng = random.Random(23)
-    alphabet = "abcd "
-    text = "".join(rng.choice(alphabet) for _ in range(500))
-    idx = SuffixIndex(text)
-    for _ in range(200):
-        i = rng.randrange(len(text))
-        m = rng.randint(1, 12)
-        probe = text[i : i + m]
-        assert idx.contains(probe)
-    for _ in range(200):
-        probe = "".join(rng.choice("wxyz") for _ in range(rng.randint(1, 6)))
-        assert idx.contains(probe) == (probe in text)
-    assert idx.contains("")
-    assert not idx.contains(text + "!")
 
 
 def test_simhash_matches_slow_reference():
@@ -173,7 +145,7 @@ def test_minhash_mersenne_reduction_matches_modulo():
     single mixed hash, undensified."""
     a, b = minhash_params(CFG)
     rng = random.Random(101)
-    p = CFG.prime
+    p = MINHASH_PRIME
     vals = [rng.randint(-(2**63), 2**63 - 1) for _ in range(500)]
     vals += [0, 1, p - 1, p, p + 1, 2 * p, -1, -p, 2**63 - 1, -(2**63)]
     # the h whose mixed value is 0: exercises the x == p fix-up
@@ -190,12 +162,12 @@ def test_oph_deterministic_and_shapes():
     a, b = minhash_params(CFG)
     rng = random.Random(7)
     s = _rand_set(rng, 300)
-    s1 = oph_minhash_batch([s], a, b, CFG.prime, CFG.num_perm)
-    s2 = oph_minhash_batch([s.copy()], a, b, CFG.prime, CFG.num_perm)
+    s1 = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
+    s2 = oph_minhash_batch([s.copy()], a, b, MINHASH_PRIME, CFG.num_perm)
     assert np.array_equal(s1, s2)
     assert s1.shape == (1, CFG.num_perm)
     # no empty sentinel left after densification
-    assert (s1 < CFG.prime * CFG.num_perm).all()
+    assert (s1 < MINHASH_PRIME * CFG.num_perm).all()
 
 
 def test_oph_batch_matches_single_rows():
@@ -203,11 +175,11 @@ def test_oph_batch_matches_single_rows():
     rng = random.Random(5)
     sets = [_rand_set(rng, rng.randint(1, 400)) for _ in range(9)]
     sets.insert(3, np.empty(0, np.int64))
-    batched = oph_minhash_batch(sets, a, b, CFG.prime, CFG.num_perm)
+    batched = oph_minhash_batch(sets, a, b, MINHASH_PRIME, CFG.num_perm)
     for i, s in enumerate(sets):
-        single = oph_minhash_batch([s], a, b, CFG.prime, CFG.num_perm)
+        single = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
         assert np.array_equal(batched[i], single[0]), i
-    assert (batched[3] == CFG.prime * CFG.num_perm).all()  # empty row sentinel
+    assert (batched[3] == MINHASH_PRIME * CFG.num_perm).all()  # empty row sentinel
 
 
 def test_oph_estimates_jaccard():
@@ -218,6 +190,6 @@ def test_oph_estimates_jaccard():
         keep = int(len(base) * frac)
         other = np.unique(np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)]))
         true_j = len(np.intersect1d(base, other)) / len(np.union1d(base, other))
-        sigs = oph_minhash_batch([base, other], a, b, CFG.prime, CFG.num_perm)
+        sigs = oph_minhash_batch([base, other], a, b, MINHASH_PRIME, CFG.num_perm)
         est = est_jaccard(sigs[0], sigs[1])
         assert abs(est - true_j) < 0.15, (frac, true_j, est)

@@ -4,7 +4,9 @@ Walks the ``import`` statements of the source (function-level imports
 included) from the query entry point (``__spark_entry__``), the
 pipeline, the command surface and cancellation, plus the ``--py-files``
 packaging seam, which is its own user surface. A module nothing reaches is dead code: delete it, or
-call it from the engine. No Spark session is started.
+call it from the engine. The same holds one level down: every top-level
+function and class in the package must be named somewhere outside its
+own definition. No Spark session is started.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ ROOTS = [
     "uncp_spark.plans.cancellation",
     "uncp_spark.deploy",
 ]
+# trees whose source may name a package function or class
+NAMING_DIRS = ["uncp_spark", "tests", "perfbench", "scripts"]
 
 
 def _modules() -> dict[str, str]:
@@ -74,3 +78,49 @@ def test_every_package_module_is_reached_from_an_entry_point():
     assert set(ROOTS) <= set(modules)
     unreached = sorted(set(modules) - _reached(modules))
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def _py_files() -> list[str]:
+    out = [os.path.join(REPO, "__spark_entry__.py")]
+    for top in NAMING_DIRS:
+        for d, _, files in os.walk(os.path.join(REPO, top)):
+            out += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    return out
+
+
+def _name_uses(tree: ast.AST):
+    """(name, line) for every AST name, attribute and import alias."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1], node.lineno
+
+
+def test_every_package_function_and_class_is_named_elsewhere():
+    trees = {}
+    for path in _py_files():
+        with open(path) as f:
+            trees[path] = ast.parse(f.read())
+    # name → every (file, line) that names it
+    uses: dict[str, list[tuple[str, int]]] = {}
+    for path, tree in trees.items():
+        for name, line in _name_uses(tree):
+            uses.setdefault(name, []).append((path, line))
+    unnamed = []
+    for path, tree in trees.items():
+        if not os.path.relpath(path, REPO).startswith("uncp_spark" + os.sep):
+            continue
+        for node in tree.body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            own = range(node.lineno, node.end_lineno + 1)
+            if all(
+                p == path and line in own for p, line in uses.get(node.name, [])
+            ):
+                unnamed.append(f"{os.path.relpath(path, REPO)}:{node.name}")
+    assert not unnamed, f"functions and classes nothing names: {unnamed}"

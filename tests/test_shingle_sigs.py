@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from uncp_spark.config import MINHASH_PRIME
 from uncp_spark.operators.ingest import ingest
 from uncp_spark.operators.signatures import signature_table
 
@@ -45,7 +46,7 @@ def test_signature_length_and_range(spark, cfg, repos_df):
     files = ingest(repos_df).limit(50)
     sigs = signature_table(files, cfg, include_shingles=False)
     # OPH densified values are bounded by num_perm * prime (offset coding)
-    max_val = cfg.prime * cfg.num_perm
+    max_val = MINHASH_PRIME * cfg.num_perm
     bad = sigs.filter(
         (F.size("minhash") != cfg.num_perm)
         | F.exists("minhash", lambda v: (v < 0) | (v > max_val))

@@ -20,12 +20,14 @@ Pipeline (SURVEY.md §7.1):
       → connected components (large-star/small-star) → clusters
       → priority scores (bytes reclaimable, dup count, path depth)
 
-plus a suffix-array pass for exact substring containment
-(operators/containment.py). Beside this engine the package holds the
-dedup/upsert idioms and the text, ANN and multimodal functions the query
-entry point (``__spark_entry__``) calls. Every module is imported on the
-way from ``DedupPipeline.run``, the command surface, the ``--py-files``
-packaging seam or the query entry point (tests/test_reachability.py).
+Containment is found one way: the bottom-k sketch index proposes the
+candidates and verify computes their exact shingle containment. Beside
+this engine the package holds the dedup/upsert idioms and the text and
+multimodal functions the query entry point (``__spark_entry__``) calls.
+Every module is imported on the way from ``DedupPipeline.run``, the
+command surface, the ``--py-files`` packaging seam or the query entry
+point, and every top-level function and class is named somewhere
+outside its own definition (tests/test_reachability.py).
 
 Every stage checkpoints to Parquet with a manifest + per-partition
 metrics so a killed job resumes mid-pipeline (uncp's atomic save,

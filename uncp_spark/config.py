@@ -27,10 +27,6 @@ MINHASH_PRIME = (1 << 31) - 1
 class SimilarityConfig:
     """One dataclass = the pinned shingle/signature config."""
 
-    # --- normalization (F14) ---
-    lowercase: bool = True
-    collapse_whitespace: bool = True
-
     # --- shingling (F14) ---
     shingle_k: int = 5          # tokens per shingle
     char_shingle_k: int = 9     # char k-grams for files shorter than shingle_k tokens
@@ -41,14 +37,10 @@ class SimilarityConfig:
     # shingles, so signature cost is O(shingles), not O(num_perm × shingles)
     num_perm: int = 128
     seed: int = 42
-    prime: int = MINHASH_PRIME
 
     # --- LSH ---
     bands: int = 32
     rows_per_band: int = 4      # bands * rows_per_band == num_perm
-
-    # --- SimHash (F16) ---
-    simhash_bits: int = 64
 
     # --- pair acceptance thresholds (S5 verify) ---
     jaccard_threshold: float = 0.7

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from uncp_spark.config import SimilarityConfig
+from uncp_spark.config import MINHASH_PRIME, SimilarityConfig
 
 # cap on tokens unpacked to the (tokens x 64) bit matrix per simhash chunk
 _SIMHASH_CHUNK_TOKENS = 500_000
@@ -26,9 +26,8 @@ def minhash_params(cfg: SimilarityConfig) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic permutation parameters, seeded once — identical on
     every executor for every batch (broadcast-by-construction)."""
     rng = np.random.RandomState(cfg.seed)
-    p = cfg.prime
-    a = rng.randint(1, p, size=cfg.num_perm).astype(np.uint64)
-    b = rng.randint(0, p, size=cfg.num_perm).astype(np.uint64)
+    a = rng.randint(1, MINHASH_PRIME, size=cfg.num_perm).astype(np.uint64)
+    b = rng.randint(0, MINHASH_PRIME, size=cfg.num_perm).astype(np.uint64)
     return a, b
 
 

@@ -72,10 +72,6 @@ def _u8(col, pos: int) -> "F.Column":
     return F.conv(F.hex(F.substring(col, pos, 1)), 16, 10).cast("int")
 
 
-def _be16(col, pos: int) -> "F.Column":
-    return F.conv(F.hex(F.substring(col, pos, 2)), 16, 10).cast("int")
-
-
 def _be32(col, pos: int) -> "F.Column":
     return F.conv(F.hex(F.substring(col, pos, 4)), 16, 10).cast("int")
 

@@ -27,13 +27,8 @@ from pyspark.sql import functions as F
 from uncp_spark.config import SimilarityConfig
 
 
-def normalize_content(col: Column, cfg: SimilarityConfig) -> Column:
-    out = col
-    if cfg.lowercase:
-        out = F.lower(out)
-    if cfg.collapse_whitespace:
-        out = F.trim(F.regexp_replace(out, r"\s+", " "))
-    return out
+def normalize_content(col: Column) -> Column:
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 def _char_shingle_hashes(norm: Column, k: int) -> Column:
@@ -56,7 +51,7 @@ def with_token_hashes(
     (operators/signatures.signature_table), so the JVM never allocates
     per-window slices. ``char_hashes`` materializes only for rows under
     ``shingle_k`` tokens (the fallback population, typically ≪1%)."""
-    norm = normalize_content(F.col(content_col), cfg)
+    norm = normalize_content(F.col(content_col))
     df = df.withColumn("norm_text", norm)
     tokens = F.split(F.col("norm_text"), " ")
     df = df.withColumn("token_hashes", F.transform(tokens, lambda t: F.xxhash64(t)))

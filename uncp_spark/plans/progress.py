@@ -145,8 +145,3 @@ def read_progress(spark: SparkSession, base_dir: str) -> DataFrame:
     if not os.path.exists(path):
         return spark.createDataFrame([], PROGRESS_SCHEMA)
     return spark.read.schema(PROGRESS_SCHEMA).json(path)
-
-
-def register_progress_view(spark: SparkSession, base_dir: str,
-                           name: str = "pipeline_progress") -> None:
-    read_progress(spark, base_dir).createOrReplaceTempView(name)

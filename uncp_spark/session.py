@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
 
@@ -104,25 +103,18 @@ def get_spark(
     return spark
 
 
-def compute_repartition(df, multiplier: int = 2):
-    """Repartition a DataFrame that feeds a compute-heavy (UDF) stage to
-    cores × multiplier. AQE coalesces shuffles by *compressed shuffle
-    bytes*, which under-parallelizes stages whose per-row cost is much
-    higher than their byte size (measured: the MinHash stage coalesced to
-    7 partitions on a 32-core session — a 4.5× wall-time loss). One cheap
-    extra exchange buys full parallelism for the expensive stage."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * multiplier)
-
-
 def ensure_parallelism(df, multiplier: int = 2):
-    """compute_repartition, but only when the input is actually starved
-    of partitions — decided by PLAN INSPECTION only, never by running a
-    job. (The previous form called ``df.rdd.getNumPartitions()``, which
-    under AQE materializes the plan's shuffle stages by submitting real
-    jobs — the exact_representatives groupBy/semi-join executed eagerly
-    here and AGAIN at the downstream action, doubling that work every
-    run.)
+    """Repartition a DataFrame that feeds a compute-heavy (UDF) stage to
+    cores × multiplier, but only when the input is actually starved of
+    partitions — decided by PLAN INSPECTION only, never by running a
+    job. AQE coalesces shuffles by *compressed shuffle bytes*, which
+    under-parallelizes stages whose per-row cost is much higher than
+    their byte size (measured: the MinHash stage coalesced to 7
+    partitions on a 32-core session — a 4.5× wall-time loss). (The
+    previous form called ``df.rdd.getNumPartitions()``, which under AQE
+    materializes the plan's shuffle stages by submitting real jobs — the
+    exact_representatives groupBy/semi-join executed eagerly here and
+    AGAIN at the downstream action, doubling that work every run.)
 
       - Plan already contains a shuffle-inducing operator (join /
         aggregate / sort / window / repartition): downstream parallelism
@@ -157,32 +149,3 @@ def ensure_parallelism(df, multiplier: int = 2):
     if len(df.inputFiles()) >= target:
         return df
     return df.repartition(target * multiplier)
-
-
-def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
-    """Spin up (and keep, via spark.python.worker.reuse) one Python UDF
-    worker per core with numpy/pandas imported and kernel buffers
-    first-touched. On this sandbox VM, per-worker warmup (imports +
-    page-zeroing of fresh buffers) costs seconds and lands in whatever
-    UDF stage runs first; a long-lived cluster pays it once per executor
-    lifetime, so benchmarks warm explicitly to measure steady state."""
-    from pyspark.sql import functions as F, types as T
-
-    if n is None:
-        master = spark.sparkContext.master
-        n = int(master.split("[")[1].rstrip("]")) if "[" in master and "*" not in master \
-            else (os.cpu_count() or 8)
-
-    @F.pandas_udf(T.LongType())
-    def _touch(x: pd.Series) -> pd.Series:
-        import numpy as np
-
-        buf = np.zeros(4_000_000, dtype=np.uint64)  # first-touch ~32 MB
-        buf[:] = np.uint64(1)
-        return x * 0 + int(buf[0])
-
-    (
-        spark.range(n * 4, numPartitions=n * 4)
-        .select(_touch(F.col("id")))
-        .write.mode("overwrite").format("noop").save()
-    )
