@@ -392,12 +392,13 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
 def q_cc_bruteforce(spark, sf_dir):
     """F8/north_rule clustering oracle: distributed connected components
-    (alternating large-star/small-star, components.py) over the exact
-    Jaccard ≥ 0.8 pair set, labels = min doc_id per component. The
+    (components.py: union-find on Arrow batches in one task, alternating
+    large-star/small-star rounds when the edges outgrow one task) over the
+    exact Jaccard ≥ 0.8 pair set, labels = min doc_id per component. The
     DuckDB oracle computes the identical components with a recursive
     transitive-closure CTE — a fully independent algorithm — so a green
-    hash match proves the union-find-over-self-joins operator, which the
-    LSH pipeline's cluster stage reuses unchanged."""
+    hash match proves the components operator, which the LSH pipeline's
+    cluster stage reuses unchanged."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = _jaccard_pair_edges(docs, threshold=0.8).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")

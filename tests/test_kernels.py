@@ -36,11 +36,11 @@ def test_minhash_deterministic():
     assert np.array_equal(a, a2) and np.array_equal(b, b2)
     rng = random.Random(7)
     s = _rand_set(rng, 100)
-    sig1 = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
-    sig2 = oph_minhash_batch([s.copy()], a2, b2, MINHASH_PRIME, CFG.num_perm)
+    sig1 = oph_minhash_batch([s], a, b, CFG.num_perm)
+    sig2 = oph_minhash_batch([s.copy()], a2, b2, CFG.num_perm)
     assert np.array_equal(sig1, sig2)
     a3, b3 = minhash_params(SimilarityConfig(seed=CFG.seed + 1))
-    sig3 = oph_minhash_batch([s], a3, b3, MINHASH_PRIME, CFG.num_perm)
+    sig3 = oph_minhash_batch([s], a3, b3, CFG.num_perm)
     assert not np.array_equal(sig1, sig3)
 
 
@@ -49,14 +49,14 @@ def test_minhash_identical_sets_identical_sigs():
     rng = random.Random(3)
     s = _rand_set(rng, 200)
     sigs = oph_minhash_batch(
-        [s, np.random.default_rng(0).permutation(s)], a, b, MINHASH_PRIME, CFG.num_perm
+        [s, np.random.default_rng(0).permutation(s)], a, b, CFG.num_perm
     )
     assert np.array_equal(sigs[0], sigs[1])  # order-invariant (set semantics)
 
 
 def test_minhash_empty_set_sentinel():
     a, b = minhash_params(CFG)
-    sigs = oph_minhash_batch([np.empty(0, np.int64)], a, b, MINHASH_PRIME, CFG.num_perm)
+    sigs = oph_minhash_batch([np.empty(0, np.int64)], a, b, CFG.num_perm)
     assert (sigs == MINHASH_PRIME * CFG.num_perm).all()
 
 
@@ -71,7 +71,7 @@ def test_minhash_estimates_jaccard():
         keep = int(len(base) * frac)
         other = np.unique(np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)]))
         true_j = len(np.intersect1d(base, other)) / len(np.union1d(base, other))
-        sigs = oph_minhash_batch([base, other], a, b, MINHASH_PRIME, CFG.num_perm)
+        sigs = oph_minhash_batch([base, other], a, b, CFG.num_perm)
         est = est_jaccard(sigs[0], sigs[1])
         assert abs(est - true_j) < 0.14, (frac, true_j, est)
 
@@ -83,9 +83,9 @@ def test_minhash_batch_matches_single_rows():
     rng = random.Random(5)
     sets = [_rand_set(rng, rng.randint(1, 60)) for _ in range(9)]
     sets.insert(3, np.empty(0, np.int64))  # empty row mid-batch
-    batched = oph_minhash_batch(sets, a, b, MINHASH_PRIME, CFG.num_perm)
+    batched = oph_minhash_batch(sets, a, b, CFG.num_perm)
     for i, s in enumerate(sets):
-        single = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
+        single = oph_minhash_batch([s], a, b, CFG.num_perm)
         assert np.array_equal(batched[i], single[0]), i
 
 
@@ -151,7 +151,7 @@ def test_minhash_mersenne_reduction_matches_modulo():
     # the h whose mixed value is 0: exercises the x == p fix-up
     vals.append(-int(b[0]) * pow(int(a[0]), -1, p) % p)
     sigs = oph_minhash_batch(
-        [np.array([v], dtype=np.int64) for v in vals], a, b, p, CFG.num_perm
+        [np.array([v], dtype=np.int64) for v in vals], a, b, CFG.num_perm
     )
     for row, v in zip(sigs, vals):
         h = v % p  # Python % is non-negative for p > 0, like np.mod
@@ -162,8 +162,8 @@ def test_oph_deterministic_and_shapes():
     a, b = minhash_params(CFG)
     rng = random.Random(7)
     s = _rand_set(rng, 300)
-    s1 = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
-    s2 = oph_minhash_batch([s.copy()], a, b, MINHASH_PRIME, CFG.num_perm)
+    s1 = oph_minhash_batch([s], a, b, CFG.num_perm)
+    s2 = oph_minhash_batch([s.copy()], a, b, CFG.num_perm)
     assert np.array_equal(s1, s2)
     assert s1.shape == (1, CFG.num_perm)
     # no empty sentinel left after densification
@@ -175,9 +175,9 @@ def test_oph_batch_matches_single_rows():
     rng = random.Random(5)
     sets = [_rand_set(rng, rng.randint(1, 400)) for _ in range(9)]
     sets.insert(3, np.empty(0, np.int64))
-    batched = oph_minhash_batch(sets, a, b, MINHASH_PRIME, CFG.num_perm)
+    batched = oph_minhash_batch(sets, a, b, CFG.num_perm)
     for i, s in enumerate(sets):
-        single = oph_minhash_batch([s], a, b, MINHASH_PRIME, CFG.num_perm)
+        single = oph_minhash_batch([s], a, b, CFG.num_perm)
         assert np.array_equal(batched[i], single[0]), i
     assert (batched[3] == MINHASH_PRIME * CFG.num_perm).all()  # empty row sentinel
 
@@ -190,6 +190,6 @@ def test_oph_estimates_jaccard():
         keep = int(len(base) * frac)
         other = np.unique(np.concatenate([base[:keep], _rand_set(rng, len(base) - keep)]))
         true_j = len(np.intersect1d(base, other)) / len(np.union1d(base, other))
-        sigs = oph_minhash_batch([base, other], a, b, MINHASH_PRIME, CFG.num_perm)
+        sigs = oph_minhash_batch([base, other], a, b, CFG.num_perm)
         est = est_jaccard(sigs[0], sigs[1])
         assert abs(est - true_j) < 0.15, (frac, true_j, est)

@@ -17,7 +17,8 @@ Pipeline (SURVEY.md §7.1):
       → LSH banding self-join → candidate pairs [skew-capped hot buckets]
         ∪ bottom-k sketch containment index
       → verify (est. Jaccard / Hamming / containment) → edges
-      → connected components (large-star/small-star) → clusters
+      → connected components (union-find in one task; large-star/
+        small-star rounds when the edges outgrow one task) → clusters
       → priority scores (bytes reclaimable, dup count, path depth)
 
 Containment is found one way: the bottom-k sketch index proposes the

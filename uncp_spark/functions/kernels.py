@@ -35,7 +35,6 @@ def oph_minhash_batch(
     shingle_arrays: list[np.ndarray],
     a: np.ndarray,
     b: np.ndarray,
-    prime: int,
     num_perm: int,
 ) -> np.ndarray:
     """One-permutation MinHash with rotation densification.
@@ -50,12 +49,13 @@ def oph_minhash_batch(
     per-permutation construction, which saturates DRAM bandwidth long
     before it saturates cores.
 
-    Empty input rows get the sentinel signature [prime·num_perm]* (never
-    collides with real values).
+    Empty input rows get the sentinel signature [p·num_perm]* (never
+    collides with real values). p is ``MINHASH_PRIME`` = 2^31 − 1: the
+    Mersenne fold below hard-codes its 31-bit shift.
     """
     n_rows = len(shingle_arrays)
-    p = np.int64(prime)
-    empty_sentinel = np.int64(prime) * np.int64(num_perm)
+    p = np.int64(MINHASH_PRIME)
+    empty_sentinel = p * np.int64(num_perm)
     out = np.full((n_rows, num_perm), empty_sentinel, dtype=np.int64)
 
     lens = np.fromiter((len(s) for s in shingle_arrays), dtype=np.int64, count=n_rows)
@@ -69,10 +69,11 @@ def oph_minhash_batch(
     # Mersenne identity (2^31 ≡ 1 mod p): shifts+adds instead of u64
     # division, identical results to %
     x = a[0] * h + b[0]
-    x = (x & np.uint64(prime)) + (x >> np.uint64(31))
-    x = (x & np.uint64(prime)) + (x >> np.uint64(31))
-    x = (x & np.uint64(prime)) + (x >> np.uint64(31))
-    x[x == np.uint64(prime)] = 0
+    mask = np.uint64(MINHASH_PRIME)
+    x = (x & mask) + (x >> np.uint64(31))
+    x = (x & mask) + (x >> np.uint64(31))
+    x = (x & mask) + (x >> np.uint64(31))
+    x[x == mask] = 0
     vals = x.astype(np.int64)
     buckets = (h % np.uint64(num_perm)).astype(np.int64)
 
@@ -92,7 +93,7 @@ def oph_minhash_batch(
                 break
             donor = np.roll(filled, -k, axis=1)
             take = empty & (donor != empty_sentinel)
-            sig[take] = donor[take] + k * int(prime)
+            sig[take] = donor[take] + k * MINHASH_PRIME
             empty &= ~take
     out[nz] = sig
     return out

@@ -1,28 +1,32 @@
-"""S6 — distributed connected components over the edge DataFrame.
+"""S6 — connected components over the edge DataFrame.
 
 The reference only ever groups by a single key (hash → group,
 src/relations.rs:327-339); multi-tier edges (exact ∪ minhash ∪ simhash ∪
-containment) need real graph clustering, which the north_rule pins as
-"union-find over iterative DataFrame self-joins".
+containment) need real graph clustering.
 
-Algorithm: alternating large-star / small-star (Kiveris et al., 2014,
-"Connected Components in MapReduce and Beyond"). Each operation is one
-groupBy-min + one join — all equi-shuffles on node id — and the
-alternation converges in O(log n) rounds even on high-diameter graphs,
-unlike naive label propagation's O(diameter). Rounds are stacked two
-per lineage cut after the first (SURVEY.md §7.3 hard part #2) — probing
-every round made the stage latency-bound at small scale (the barrier
-jobs cost more than the shuffle work between them) — while EVERY round
-stays convergence-checked: the intermediate round's checksum rides the
-probe job as an observed metric and the final round's rides the
-checkpoint write, so each probe is ONE Spark job total and a shallow
-graph (the common case) stops within one round of its fixpoint; with a
-``checkpoint_dir``
-the cut is a RELIABLE checkpoint (parquet write + read-back — survives
-executor loss, required at cluster scale where a lost executor would
-otherwise kill the job mid-iteration); without one it falls back to
-``localCheckpoint`` (blocks pinned to executor storage — fine for
-local-mode tests, not fault-tolerant).
+Two shapes, picked from the plan alone (no Spark job):
+
+- **Small graph** — the edge frame's optimizer size estimate is at most
+  ``spark.sql.files.maxPartitionBytes``, i.e. Spark itself would read
+  it as one split. The frame is ``coalesce(1)``'d and solved in ONE
+  ``mapInArrow`` task by ``_union_find_batches``, a numpy union-find
+  over dictionary codes assigned in id order (pyarrow ``unique`` +
+  ``sort_indices``; byte order for hex-string ids, numeric order for
+  long ids), so each component's root is its minimum code and
+  ``cluster_id`` = min ``file_id`` falls out of the union-find itself.
+  The caller's action is the only Spark job (the pipeline's ``labels``
+  stage went from 20-39 jobs to 1).
+- **Larger graph** — alternating large-star / small-star rounds over
+  the canonical edge set (Kiveris et al., 2014: O(log n) rounds even on
+  high-diameter graphs, each an equi-shuffle on node id). Rounds are
+  stacked two per lineage cut once the graph has proven deep (3 rounds
+  without fixpoint), and every round stays convergence-checked: the
+  intermediate round's checksum rides the probe job as an observed
+  metric and the final round's rides the cut, so each probe is ONE
+  Spark job. With a ``checkpoint_dir`` the cut is a RELIABLE checkpoint
+  (parquet write + read-back — survives executor loss); without one it
+  falls back to ``localCheckpoint`` (not fault-tolerant, fine in local
+  mode).
 
 Output: labels(file_id, cluster_id) where cluster_id = min file_id of
 the component — deterministic, so cluster ids are reproducible across
@@ -31,8 +35,99 @@ runs (the recall gate compares memberships).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+
+def _min_roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over codes ``0..n-1``: hook every edge's larger root to
+    its smaller one, then pointer-jump until every node points at its
+    root. Parents only ever decrease, so the root of each component is
+    its minimum code."""
+    parent = np.arange(n, dtype=np.int64)
+    while u.size:
+        ru, rv = parent[u], parent[v]
+        live = ru != rv
+        if not live.any():
+            break
+        u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return parent
+
+
+#: edge rows per union-find pass of the one-task kernel (see
+#: ``_union_find_batches``)
+_FOLD_ROWS = 1 << 20
+
+
+def _solve(t: pa.Table) -> pa.Table:
+    """Edges (src, dst) with no nulls or self-loops → (file_id,
+    cluster_id) for every node of those edges, in id order, cluster_id
+    the minimum id of the node's component."""
+    n, typ = t.num_rows, t.schema.types[0]
+    if n == 0:
+        return pa.table({"file_id": pa.array([], typ), "cluster_id": pa.array([], typ)})
+    enc = pc.dictionary_encode(pa.chunked_array(t.column(0).chunks + t.column(1).chunks, typ))
+    # every chunk carries the full dictionary; re-code it in id order
+    uniq = enc.chunk(0).dictionary
+    order = pc.sort_indices(uniq)
+    rank = np.empty(len(uniq), dtype=np.int64)
+    rank[order.to_numpy()] = np.arange(len(uniq))
+    codes = rank[np.concatenate([c.indices.to_numpy() for c in enc.chunks])]
+    roots = _min_roots(codes[:n], codes[n:], len(uniq))
+    uniq = uniq.take(order)
+    return pa.table({"file_id": uniq, "cluster_id": uniq.take(pa.array(roots))})
+
+
+def _star_forest(batches: list, schema: pa.Schema) -> list:
+    """Edge batches → the star forest (node → root, node ≠ root) of
+    their components, as batches of ``schema``: fewer rows, same
+    components."""
+    labels = _solve(pa.Table.from_batches(batches, schema))
+    forest = labels.filter(pc.not_equal(labels.column(0), labels.column(1)))
+    return pa.Table.from_arrays(forest.columns, schema=schema).to_batches()
+
+
+def _union_find_batches(batches):
+    """mapInArrow kernel: edge batches (src, dst) of ONE partition →
+    (file_id, cluster_id) for every node of those edges, cluster_id the
+    minimum id of the node's component. Null endpoints and self-loops
+    label nothing (their ``not_equal`` is null or false, and ``filter``
+    drops both).
+
+    Edges are folded ``_FOLD_ROWS`` at a time into the star forest of
+    every edge before them, so the working set is one chunk plus a row
+    per node seen, however many edges there are: parquet stores a dense
+    near-dup cluster's edges in ~4 B/row, so an edge set that fits one
+    split on disk can hold ~17× its size in Arrow rows."""
+    held, new, schema = [], 0, None
+    for b in batches:
+        schema = b.schema
+        held.append(b.filter(pc.not_equal(b.column(0), b.column(1))))
+        new += b.num_rows
+        if new >= _FOLD_ROWS:
+            held, new = _star_forest(held, schema), 0
+    if schema is not None:
+        yield from _solve(pa.Table.from_batches(held, schema)).to_batches()
+
+
+def _fits_one_task(edges: DataFrame) -> bool:
+    """Plan-only size test (runs no job): does the optimizer's size
+    estimate fit the split size Spark itself reads as one task? Frames
+    with no estimate (RDD-backed) report ``Long.MaxValue`` and do not."""
+    jspark = edges.sparkSession._jsparkSession
+    limit = jspark.sessionState().conf().filesMaxPartitionBytes()
+    size = edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) <= int(limit)
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -102,8 +197,9 @@ def _checksum(e: DataFrame) -> tuple[int, int]:
 
 
 #: rounds/probes executed by the most recent connected_components call
-#: in this process (cleared on entry, so a call that raises leaves its
-#: own counts) — diagnostic only, never read by the algorithm.
+#: in this process (0/0 on the one-task path; cleared on entry, so a
+#: call that raises leaves its own counts) — diagnostic only, never read
+#: by the algorithm.
 LAST_RUN_STATS: dict = {}
 
 
@@ -115,12 +211,21 @@ def connected_components(
     Only nodes that appear in an edge are labeled; callers union in
     singleton labels for isolated files (see ``label_all``).
 
-    ``checkpoint_dir``: directory for reliable per-iteration checkpoints
-    (parquet). Each round's edge set replaces the previous round's file,
-    so the footprint is two snapshots, and a mid-CC kill resumes from
-    the edges-stage checkpoint upstream with no pinned-executor state.
+    ``max_iter`` bounds the star rounds. ``checkpoint_dir``: directory
+    for reliable per-iteration checkpoints (parquet). Each round's edge
+    set replaces the previous round's file, so the footprint is two
+    snapshots, and a mid-CC kill resumes from the edges-stage checkpoint
+    upstream with no pinned-executor state. The one-task path runs no
+    rounds and writes nothing there.
     """
     LAST_RUN_STATS.clear()
+    edges = edges.select("src", "dst")
+    if _fits_one_task(edges):
+        LAST_RUN_STATS.update({"rounds": 0, "probes": 0})
+        t = edges.schema["src"].dataType
+        schema = StructType([StructField("file_id", t), StructField("cluster_id", t)])
+        return edges.coalesce(1).mapInArrow(_union_find_batches, schema)
+
     spark = edges.sparkSession
     # shuffle-interior id interning (see lsh.intern_hex_id): CC shuffles
     # (src, dst) through ~5-6 exchanges per round for O(log n) rounds;

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from uncp_spark.config import MINHASH_PRIME, SimilarityConfig
+from uncp_spark.config import SimilarityConfig
 from uncp_spark.functions.kernels import (
     minhash_params,
     oph_minhash_batch,
@@ -85,7 +85,7 @@ def make_fused_signatures_udf(cfg: SimilarityConfig, include_shingles: bool = Tr
     @F.pandas_udf(out_type)
     def fused_udf(token_hashes: pd.Series, char_hashes: pd.Series) -> pd.DataFrame:
         th, sh = _shingle_batch(token_hashes, char_hashes, k, weights)
-        mh = oph_minhash_batch(sh, a, b, MINHASH_PRIME, num_perm)
+        mh = oph_minhash_batch(sh, a, b, num_perm)
         sim = simhash_batch(th)
         cols = {
             "n_shingles": [len(s) for s in sh],

@@ -212,7 +212,7 @@ def score_pairs(
                         F.col("bottomk").alias("bk_a"))
         bkb = bk.select(F.col("file_id").alias("dst"),
                         F.col("bottomk").alias("bk_b"))
-        union_k = F.slice(F.array_sort(F.array_union("bk_a", "bk_b")), 1, m)
+        union_k = F.slice(F.sort_array(F.array_union("bk_a", "bk_b")), 1, m)
         # broadcast of the residual frame (same measured trade as
         # phase1: a shuffle_hash pin exchanges the ~2 KB/row sketch
         # frame and is slower at bench scale; AQE flips the strategy
