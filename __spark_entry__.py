@@ -5,11 +5,12 @@
 SURVEY.md §2; ``oracle_sql()`` gives the DuckDB-equivalent SQL for every
 SQL-expressible one (fuzzy-signature internals get rows-only checks).
 
-Dedup queries run over a ``repos``-shaped table derived deterministically
-and *SQL-expressibly* from the driver's ``documents`` view
-(uncp_spark.fixtures.repos_from_documents): every 3rd doc gets an exact
-mirror copy, every 5th a near-duplicate fork (appended token tail), so
-exact/near cluster semantics are exercised with known structure.
+Every query reads only the ``documents`` table. Dedup queries run over
+a ``repos``-shaped table derived deterministically and *SQL-expressibly*
+from it (uncp_spark.fixtures.repos_from_documents): every 3rd doc gets
+an exact mirror copy, every 5th a near-duplicate fork (appended token
+tail), so exact/near cluster semantics are exercised with known
+structure.
 
 Column-name discipline: every computed column is aliased identically in
 the Spark plan and the oracle SQL; doubles are rounded on both sides.
@@ -26,7 +27,6 @@ from uncp_spark.config import SimilarityConfig
 from uncp_spark.fixtures import REPOS_FROM_DOCUMENTS_DUCKDB, repos_from_documents
 from uncp_spark.functions.text import lang_id, quality_score, token_count, fingerprint64
 from uncp_spark.operators.components import connected_components, label_all
-from uncp_spark.operators.dedup import dedup_keep_last
 from uncp_spark.operators.exact import (
     exact_cluster_edges,
     exact_clusters,
@@ -181,77 +181,6 @@ def q_glob_path_filter(spark, sf_dir):
     ).select("repo", "path")
 
 
-def q_dedup_keep_last(spark, sf_dir):
-    """U3 on events: latest event per user (keep-last window idiom)."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = dedup_keep_last(
-        events, ["user_id"], [F.col("ts"), F.col("event_id")]
-    )
-    return out.select("user_id", "event_id", "event_type",
-                      F.round("value", 4).alias("value_r"))
-
-
-def q_event_first_seen(spark, sf_dir):
-    """F7: ns-epoch ↔ timestamp conversions (uncp src/data.rs:241-246;
-    first_seen relation columns src/relations.rs:330,360,386) — per-user
-    first event as timestamp, as i64 ns, and round-tripped ns→timestamp."""
-    from uncp_spark.functions.timefns import ns_to_timestamp, timestamp_to_ns
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    agg = events.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
-    return agg.select(
-        "user_id",
-        "first_ts",
-        timestamp_to_ns(F.col("first_ts")).alias("first_ns"),
-        ns_to_timestamp(timestamp_to_ns(F.col("first_ts")))
-        .cast("timestamp_ntz").alias("first_ts_rt"),
-    )
-
-
-def q_upsert_coalesce(spark, sf_dir):
-    """J1: left join + coalesce upsert — customer balances updated from
-    order totals where present."""
-    from uncp_spark.operators.upsert import upsert_columns
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", F.round("c_acctbal", 2).alias("balance")
-    )
-    updates = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("balance"))
-    )
-    return upsert_columns(cust, updates, ["c_custkey"], ["balance"])
-
-
-def q_tpch_q1_agg(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_top_customers(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    agg = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("total_spent"),
-             F.count("*").alias("n_orders"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("total_spent"), F.asc("c_custkey"))
-    return agg.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 20)
-
-
 def q_text_quality(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select(
@@ -272,73 +201,6 @@ def q_token_stats_by_lang(spark, sf_dir):
             F.sum("n_tokens").alias("sum_tokens"),
         )
     )
-
-
-def q_media_metadata(spark, sf_dir):
-    """Multimodal plumbing: documents text as binary payloads."""
-    from uncp_spark.functions.multimodal import media_metadata
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"), F.encode("text", "UTF-8").alias("payload")
-    )
-    return media_metadata(media)
-
-
-def q_media_dimensions(spark, sf_dir):
-    """F13 real half: plant REAL PNG/GIF/JPEG header bytes (synthesized
-    deterministically from doc_id, pure column math → unhex) and recover
-    width/height/channels by parsing those bytes with media_dimensions.
-    The oracle asserts the planted ground truth, so a parser that reads
-    the wrong offset, endianness, or JPEG segment fails the hash match.
-    JPEG is the adversarial case: the APP0 length varies per row, so the
-    SOF frame header sits at a data-dependent offset."""
-    from uncp_spark.functions.multimodal import media_dimensions
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def hex2(c):
-        return F.lpad(F.lower(F.hex(c)), 2, "0")
-
-    def hex4(c):
-        return F.lpad(F.lower(F.hex(c)), 4, "0")
-
-    def hex8(c):
-        return F.lpad(F.lower(F.hex(c)), 8, "0")
-
-    d = F.col("doc_id")
-    w = (d % 1000 + 16).cast("long")
-    h = ((d * 7) % 1000 + 16).cast("long")
-    # PNG color type cycles through the five legal values
-    ct = F.element_at(F.array(*[F.lit(v) for v in (0, 2, 3, 4, 6)]),
-                      (d % 5 + 1).cast("int"))
-    png_hex = F.concat(
-        F.lit("89504e470d0a1a0a" + "0000000d" + "49484452"),
-        hex8(w), hex8(h), F.lit("08"), hex2(ct), F.lit("000000"),
-    )
-    gif_hex = F.concat(
-        F.lit("474946383961"),
-        hex2(w % 256), hex2((w / 256).cast("long")),
-        hex2(h % 256), hex2((h / 256).cast("long")),
-        F.lit("f70000"),
-    )
-    pad = (d % 24 + 1).cast("int")
-    jch = F.when(d % 2 == 0, F.lit(3)).otherwise(F.lit(1))
-    jpeg_hex = F.concat(
-        F.lit("ffd8" + "ffe0"), hex4(pad + 2), F.repeat(F.lit("4a"), pad),
-        F.lit("ffc0"), hex4(jch * 3 + 8), F.lit("08"), hex4(h), hex4(w),
-        hex2(jch), F.repeat(F.lit("011100"), jch),
-    )
-    payload_hex = (
-        F.when(d % 4 == 0, png_hex)
-        .when(d % 4 == 1, gif_hex)
-        .when(d % 4 == 2, jpeg_hex)
-        .otherwise(F.lit("000102030405060708"))
-    )
-    media = docs.select(
-        d.alias("media_id"), F.unhex(payload_hex).alias("payload")
-    )
-    return media_dimensions(media)
 
 
 def _jaccard_pair_edges(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
@@ -631,17 +493,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "files_by_lang": q_files_by_lang,
         "path_predicates": q_path_predicates,
         "glob_path_filter": q_glob_path_filter,
-        # generic operator idioms (oracle-checked)
-        "dedup_keep_last": q_dedup_keep_last,
-        "event_first_seen": q_event_first_seen,
-        "upsert_coalesce": q_upsert_coalesce,
-        "tpch_q1_agg": q_tpch_q1_agg,
-        "top_customers": q_top_customers,
         # training-pipeline functions (oracle-checked)
         "text_quality": q_text_quality,
         "token_stats_by_lang": q_token_stats_by_lang,
-        "media_metadata": q_media_metadata,
-        "media_dimensions": q_media_dimensions,
         "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
         "lsh_recall_vs_bruteforce": q_lsh_recall_vs_bruteforce,
         "cc_bruteforce": q_cc_bruteforce,
@@ -806,52 +660,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE (path GLOB 'docs/*' OR path GLOB 'vendored/*')
               AND NOT path GLOB '*doc_1*.txt'
         """,
-        "dedup_keep_last": """
-            SELECT user_id, event_id, event_type, round(value, 4) AS value_r
-            FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY user_id ORDER BY ts DESC, event_id DESC
-              ) AS rn FROM events
-            ) WHERE rn = 1
-        """,
-        "event_first_seen": """
-            SELECT user_id, min(ts) AS first_ts,
-                   epoch_us(min(ts)) * 1000 AS first_ns,
-                   make_timestamp(epoch_us(min(ts))) AS first_ts_rt
-            FROM events GROUP BY user_id
-        """,
-        "upsert_coalesce": """
-            WITH updates AS (
-              SELECT o_custkey AS c_custkey,
-                     round(sum(o_totalprice), 2) AS u_balance
-              FROM orders GROUP BY o_custkey
-            )
-            SELECT c.c_custkey,
-                   coalesce(u.u_balance, round(c.c_acctbal, 2)) AS balance
-            FROM customer c LEFT JOIN updates u USING (c_custkey)
-        """,
-        "tpch_q1_agg": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= DATE '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "top_customers": """
-            WITH agg AS (
-              SELECT c.c_custkey, c.c_name,
-                     round(sum(o.o_totalprice), 2) AS total_spent,
-                     count(*) AS n_orders
-              FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-              GROUP BY c.c_custkey, c.c_name
-            )
-            SELECT *, row_number() OVER (
-              ORDER BY total_spent DESC, c_custkey ASC
-            )::INT AS rnk
-            FROM agg QUALIFY rnk <= 20
-        """,
         "text_quality": """
             WITH t AS (
               SELECT doc_id, text,
@@ -889,55 +697,6 @@ def oracle_sql() -> dict[str, str]:
                    round(avg(n_tokens), 4) AS avg_tokens,
                    sum(n_tokens)::BIGINT AS sum_tokens
             FROM t GROUP BY lang
-        """,
-        "media_metadata": """
-            WITH h AS (
-              SELECT doc_id, text,
-                     lower(substring(hex(encode(text)), 1, 24)) AS head
-              FROM documents
-            )
-            SELECT doc_id AS media_id,
-                   octet_length(encode(text))::BIGINT AS byte_len,
-                   CASE
-                     WHEN starts_with(head, '89504e47') THEN 'image/png'
-                     WHEN starts_with(head, 'ffd8ff') THEN 'image/jpeg'
-                     WHEN starts_with(head, '47494638') THEN 'image/gif'
-                     WHEN starts_with(head, '494433') THEN 'audio/mpeg'
-                     WHEN starts_with(head, 'fff1') THEN 'audio/aac'
-                     WHEN starts_with(head, '1a45dfa3') THEN 'video/webm'
-                     WHEN starts_with(head, '00000018667479706d703432')
-                       THEN 'video/mp4'
-                     ELSE 'application/octet-stream'
-                   END AS media_type,
-                   sha256(text) AS sha256
-            FROM h
-        """,
-        # ground truth of the planted headers (q_media_dimensions
-        # synthesizes payloads from doc_id; Spark must RECOVER these by
-        # parsing the bytes — wrong offset/endianness/segment → mismatch)
-        "media_dimensions": """
-            SELECT doc_id AS media_id,
-                   CASE doc_id % 4
-                     WHEN 0 THEN 'image/png'
-                     WHEN 1 THEN 'image/gif'
-                     WHEN 2 THEN 'image/jpeg'
-                     ELSE 'application/octet-stream'
-                   END AS media_type,
-                   CASE WHEN doc_id % 4 IN (0, 1, 2)
-                        THEN (doc_id % 1000 + 16)::INT END AS width,
-                   CASE WHEN doc_id % 4 IN (0, 1, 2)
-                        THEN ((doc_id * 7) % 1000 + 16)::INT END AS height,
-                   CASE
-                     WHEN doc_id % 4 = 0 THEN
-                       CASE doc_id % 5  -- color type [0,2,3,4,6] → channels
-                         WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 1
-                         WHEN 3 THEN 2 WHEN 4 THEN 4
-                       END::INT
-                     WHEN doc_id % 4 = 1 THEN 3
-                     WHEN doc_id % 4 = 2 THEN
-                       (CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END)::INT
-                   END AS channels
-            FROM documents
         """,
         "ngram_jaccard_pairs": """
             WITH toks AS (

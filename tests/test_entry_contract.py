@@ -1,9 +1,13 @@
 """Mini-driver harness: every oracle-backed queries() entry must match
 its oracle_sql() on DuckDB at sf0.001 — same columns, same row count,
 same values (order-insensitive). Catches contract drift before the
-real driver runs at sf0.01."""
+real driver runs at sf0.01. The queries run on an sf dir that holds
+only the TABLES they may read, so one that reads any other table
+fails."""
 
 from __future__ import annotations
+
+import os
 
 import duckdb
 import pandas as pd
@@ -12,15 +16,22 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")
-def duck():
+def sf_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("sf")
+    for t in TABLES:
+        os.symlink(f"{SF}/{t}.parquet", d / f"{t}.parquet")
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
 
 
@@ -43,9 +54,9 @@ def test_every_oracle_key_has_a_query():
 
 
 @pytest.mark.parametrize("name", ORACLE_KEYS)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, sf_dir, name):
     q = entrymod.queries()[name]
-    spark_pdf = q(spark, SF).toPandas()
+    spark_pdf = q(spark, sf_dir).toPandas()
     duck_pdf = duck.sql(entrymod.oracle_sql()[name]).df()
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), name
@@ -67,12 +78,12 @@ def test_query_matches_oracle(spark, duck, name):
                                   rtol=0, atol=1e-9)
 
 
-def test_rows_only_queries_return_rows(spark):
+def test_rows_only_queries_return_rows(spark, sf_dir):
     qs = entrymod.queries()
     rows_only = sorted(set(qs) - set(entrymod.oracle_sql()))
     assert rows_only
     for name in rows_only:
-        df = qs[name](spark, SF)
+        df = qs[name](spark, sf_dir)
         assert df.count() > 0, name
 
 

@@ -137,7 +137,10 @@ def test_checkpoint_write_is_single_scan(spark, tmpdir_path):
     read I/O at 100 TB). Now the write job is the only Spark job a
     checkpoint costs — rows and per-partition lineage come from the
     parquet footers (asserted via statusTracker job counts), and the
-    manifest shape is unchanged."""
+    manifest shape is unchanged. Reading the checkpoint back takes the
+    schema from the manifest, so the read adds no schema-inference job;
+    a manifest without a schema is not complete."""
+    import json
     import os
 
     from uncp_spark.sources import checkpoint as ckpt
@@ -151,14 +154,25 @@ def test_checkpoint_write_is_single_scan(spark, tmpdir_path):
         res = ckpt.write_checkpoint(
             df, os.path.join(tmpdir_path, "st"), "st", "cfg", "t1"
         )
+        back = ckpt.read_checkpoint(spark, res.path)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("ckpt-single-scan")
-    assert len(jobs) == 1, f"checkpoint write ran {len(jobs)} jobs: {jobs}"
+    assert len(jobs) == 1, f"checkpoint write + read ran {len(jobs)} jobs: {jobs}"
     assert res.rows == 100
     pm = res.manifest["partition_metrics"]
     assert sum(p["rows"] for p in pm) == 100
     assert all(p["bytes"] > 0 for p in pm)
     assert [p["partition_id"] for p in pm] == list(range(len(pm)))
-    # footer-derived metrics must agree with an actual scan
-    assert spark.read.parquet(res.path).count() == 100
+    # footer-derived metrics must agree with an actual scan, and the
+    # read-back with the manifest's schema with a schema-inferring read
+    inferred = spark.read.parquet(res.path)
+    assert inferred.count() == 100
+    assert back.schema == inferred.schema
+    assert sorted(back.collect()) == sorted(inferred.collect())
+    assert ckpt.is_complete(res.path, "cfg", "t1")
+    m = ckpt.read_manifest(res.path)
+    del m["schema"]
+    with open(os.path.join(res.path, ckpt.MANIFEST), "w") as f:
+        json.dump(m, f)
+    assert not ckpt.is_complete(res.path, "cfg", "t1")

@@ -23,9 +23,8 @@ Pipeline (SURVEY.md §7.1):
 
 Containment is found one way: the bottom-k sketch index proposes the
 candidates and verify computes their exact shingle containment. Beside
-this engine the package holds the dedup/upsert idioms and the text and
-multimodal functions the query entry point (``__spark_entry__``) calls.
-Every module is imported on the way from ``DedupPipeline.run``, the
+this engine the package holds the text functions the query entry point
+(``__spark_entry__``) calls. Every module is imported on the way from ``DedupPipeline.run``, the
 command surface, the ``--py-files`` packaging seam or the query entry
 point, and every top-level function and class is named somewhere
 outside its own definition (tests/test_reachability.py).

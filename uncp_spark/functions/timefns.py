@@ -1,29 +1,17 @@
-"""F7 — ns-epoch ↔ timestamp conversions.
+"""F7 — timestamp → ns-epoch conversions.
 
 Reference parity: uncp stores every time as an i64 of *nanoseconds*
 since the Unix epoch — file mtimes and the per-row ``last_processed``
 stamp (src/data.rs:241-246, ``timestamp_nanos_opt``), and the
 ``first_seen`` column of every relation table (src/relations.rs:330,
-360,386). Spark timestamps carry microsecond precision, so ns → ts
-truncates to the µs and ts → ns is exact (µs × 1000).
+360,386). Spark timestamps carry microsecond precision, so ts → ns is
+exact (µs × 1000).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def ns_to_timestamp(col: Column) -> Column:
-    """i64 ns-epoch → timestamp (µs precision, truncating).
-
-    Integer-exact: ``col / 1000`` in double loses low bits above 2^53
-    (~1969-04 in ns-epoch!), so a 2024 timestamp round-trips 1 µs off
-    roughly every 2000th value. Decimal division + floor is exact over
-    the full i64 range."""
-    return F.timestamp_micros(
-        F.floor(col.cast("decimal(38,0)") / F.lit(1000)).cast("long")
-    )
 
 
 def timestamp_to_ns(col: Column) -> Column:

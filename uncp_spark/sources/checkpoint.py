@@ -7,7 +7,8 @@ loses ≤5 s of work (src/engine.rs:449-461, T2).
 
 Spark-first re-expression: every pipeline stage writes its output as a
 Parquet directory plus a ``_manifest.json`` recording the stage name,
-config hash, input manifest hashes, row count and per-partition metrics.
+config hash, input manifest hashes, row count, per-partition metrics and
+the schema the directory is read back with.
 A stage is *complete* iff the directory holds Spark's ``_SUCCESS`` marker
 AND a manifest whose config/input hashes match the current run — so a
 killed job resumes at the first incomplete stage, and a config change
@@ -28,6 +29,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 
@@ -63,6 +65,9 @@ def is_complete(path: str, config_hash: str, input_token: str) -> bool:
         and m.get("config_hash") == config_hash
         and m.get("input_token") == input_token
         and m.get("complete") is True
+        # read_checkpoint reads with this schema; a manifest without one
+        # predates it, so the stage is rebuilt rather than misread
+        and "schema" in m
     )
 
 
@@ -143,6 +148,9 @@ def write_checkpoint(
         "seconds": round(seconds, 3),
         "n_partitions": len(per_part),
         "partition_metrics": per_part,
+        # read back with this schema: a schema-less parquet read runs a
+        # footer-reading inference job per call
+        "schema": df.schema.json(),
         "complete": True,
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         # per-write nonce: makes manifest_token unique per materialization,
@@ -160,20 +168,28 @@ def write_checkpoint(
 
 
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
-    """Read a stage checkpoint back. A LOCAL directory that exists but
-    lost its ``_SUCCESS`` marker (killed mid-write, partial cleanup) is
-    a corrupt store — raise the typed error so callers rebuild the
-    stage instead of silently reading a partial commit. Non-local paths
-    skip the check (their committer's atomicity applies)."""
-    if os.path.isdir(path) and not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from uncp_spark.errors import CheckpointCorruptError
+    """Read a stage checkpoint back with the schema its manifest records,
+    so the read runs no schema-inference job. A LOCAL directory that
+    exists but lost its ``_SUCCESS`` marker (killed mid-write, partial
+    cleanup) is a corrupt store — raise the typed error so callers
+    rebuild the stage instead of silently reading a partial commit.
+    Non-local paths skip the marker check (their committer's atomicity
+    applies). A manifest without a schema is corrupt the same way."""
+    from uncp_spark.errors import CheckpointCorruptError
 
+    if os.path.isdir(path) and not os.path.exists(os.path.join(path, "_SUCCESS")):
         raise CheckpointCorruptError(
             f"checkpoint at {path!r} has no _SUCCESS marker — the write "
             "never committed; rebuild the stage (resume skips only "
             "manifest-complete stages)"
         )
-    return spark.read.parquet(path)
+    schema = (read_manifest(path) or {}).get("schema")
+    if schema is None:
+        raise CheckpointCorruptError(
+            f"checkpoint at {path!r} has no schema in its manifest; "
+            "rebuild the stage"
+        )
+    return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(path)
 
 
 def manifest_token(path: str) -> str:
