@@ -12,35 +12,32 @@ an exact mirror copy, every 5th a near-duplicate fork (appended token
 tail), so exact/near cluster semantics are exercised with known
 structure.
 
+``entry`` and the near-dup queries build no stage graph of their own:
+they read the outputs of ONE ``DedupPipeline.run`` per session and
+corpus (``_engine_run``), so the oracles check the code the engine runs.
+
 Column-name discipline: every computed column is aliased identically in
 the Spark plan and the oracle SQL; doubles are rounded on both sides.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 from collections.abc import Callable
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from uncp_spark.config import SimilarityConfig
 from uncp_spark.fixtures import REPOS_FROM_DOCUMENTS_DUCKDB, repos_from_documents
-from uncp_spark.functions.text import lang_id, quality_score, token_count, fingerprint64
 from uncp_spark.operators.components import connected_components, label_all
-from uncp_spark.operators.exact import (
-    exact_cluster_edges,
-    exact_clusters,
-    exact_representatives,
-    same_name_groups,
-    same_size_groups,
-)
-from uncp_spark.operators.containment_index import combined_candidate_pairs
+from uncp_spark.operators.exact import exact_clusters, same_name_groups, same_size_groups
 from uncp_spark.operators.ingest import ingest
 from uncp_spark.operators.lsh import candidate_pairs
-from uncp_spark.operators.priority import cluster_stats, priority_ranked
-
-from uncp_spark.operators.signatures import signature_table
-from uncp_spark.operators.verify import accept_edges, score_pairs
+from uncp_spark.operators.verify import score_pairs
+from uncp_spark.plans.pipeline import DedupPipeline
 
 CFG = SimilarityConfig()
 
@@ -51,35 +48,33 @@ def _files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest(repos_from_documents(spark, sf_dir))
 
 
-def _sigs(files: DataFrame) -> DataFrame:
-    from uncp_spark.session import ensure_parallelism
-
-    reps = ensure_parallelism(exact_representatives(files))
-    return signature_table(reps, CFG).select(
-        "file_id", "repo", "path", "lang", "size", "depth",
-        "minhash", "simhash", "shingles", "n_shingles", "bottomk",
-        "norm_text",
+def _engine_run(spark: SparkSession, sf_dir: str) -> dict:
+    """The outputs of ``DedupPipeline.run`` over the documents-derived
+    repos table. Checkpoints go to one directory per corpus file
+    (symlinked sf dirs share it) under the session's SparkFiles root,
+    which the session's stop removes. The input token names the corpus
+    file with its size and mtime, so a second call in the session
+    resumes every stage."""
+    docs = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
+    st = os.stat(docs)
+    base_dir = os.path.join(
+        SparkFiles.getRootDirectory(), "uncp_entry",
+        hashlib.sha1(docs.encode()).hexdigest(),
     )
-
-
-def _near_dup_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    files = _files(spark, sf_dir)
-    sigs = _sigs(files)
-    pairs, _hot_b, _hot_s = combined_candidate_pairs(sigs, CFG)
-    near = accept_edges(score_pairs(pairs, sigs, CFG), CFG)
-    edges = near.select("src", "dst").unionByName(
-        exact_cluster_edges(files).select("src", "dst")
+    return DedupPipeline(base_dir=base_dir, cfg=CFG).run(
+        spark,
+        repos_from_documents(spark, sf_dir),
+        input_token=f"{docs}|{st.st_size}|{st.st_mtime_ns}",
+        register_sql_views=False,
+        progress=False,
     )
-    labels = connected_components(edges)
-    return label_all(files, labels)
 
 
 # ---------------------------------------------------------------- entry
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: priority-ranked near-duplicate clusters on sf0.001."""
-    labeled = _near_dup_labeled(spark, "/root/testdata/sf0.001")
-    return priority_ranked(cluster_stats(labeled))
+    return _engine_run(spark, "/root/testdata/sf0.001")["clusters"]
 
 
 # ---------------------------------------------------------------- queries
@@ -181,28 +176,6 @@ def q_glob_path_filter(spark, sf_dir):
     ).select("repo", "path")
 
 
-def q_text_quality(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        quality_score(F.col("text")).alias("quality"),
-    )
-
-
-def q_token_stats_by_lang(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.select("lang", token_count(F.col("text")).alias("n_tokens"))
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.avg("n_tokens"), 4).alias("avg_tokens"),
-            F.sum("n_tokens").alias("sum_tokens"),
-        )
-    )
-
-
 def _jaccard_pair_edges(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact token-set Jaccard pairs with a *lossless* length-bucket
     blocker: J(A,B) ≥ t implies min(|A|,|B|)/max(|A|,|B|) ≥ t, so at
@@ -284,9 +257,9 @@ def q_lsh_recall_vs_bruteforce(spark, sf_dir):
     this is a deterministic, seed-pinned equality on the driver corpus.
     Reference anchor: IdenticalHashes pair grouping src/relations.rs:327-339
     + DESIGN.md:109-117 candidate-pair table."""
-    files = _files(spark, sf_dir)
-    sigs = _sigs(files)
-    cands, _ = candidate_pairs(sigs, CFG)
+    run = _engine_run(spark, sf_dir)
+    files = run["files"]
+    cands, _ = candidate_pairs(run["sigs"], CFG)
     id_sha = files.select("file_id", "sha256")
     pairs_sha = (
         cands.join(id_sha.select(F.col("file_id").alias("src"),
@@ -329,91 +302,42 @@ def q_lsh_recall_vs_bruteforce(spark, sf_dir):
 
 def q_shingle_stats(spark, sf_dir):
     """F14 oracle: per-distinct-content shingle-set cardinality from the
-    real signature stage (signature_table: 5-token windows as rolling
-    positional hashes of per-token xxhash64, 9-char-gram xxhash64
+    engine run's signature stage (signature_table: 5-token windows as
+    rolling positional hashes of per-token xxhash64, 9-char-gram xxhash64
     fallback under 5 tokens). DuckDB rebuilds the identical windows as
     strings — token windows joined by space are injective (tokens
     cannot contain spaces), so count-distinct matches exactly unless
     the token or window hashing collides (none on this corpus)."""
-    files = _files(spark, sf_dir)
-    sigs = _sigs(files)
-    return sigs.join(files.select("file_id", "sha256"), "file_id").select(
-        "sha256", "n_shingles"
-    )
-
-
-def q_fingerprint_cardinality(spark, sf_dir):
-    """F — document fingerprint (xxhash64 of normalized text) collision
-    audit: distinct fingerprints must equal distinct normalized texts.
-    DuckDB cannot compute xxhash64, but it can compute what the count
-    must equal if the fingerprint is injective on the corpus — the
-    invariant the dedup index actually relies on."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
-    return docs.agg(
-        F.countDistinct(norm).alias("n_norm"),
-        F.countDistinct(fingerprint64(F.col("text"))).alias("n_fp"),
-    )
+    run = _engine_run(spark, sf_dir)
+    ids = run["files"].select("file_id", "sha256")
+    return run["sigs"].join(ids, "file_id").select("sha256", "n_shingles")
 
 
 # ----- fuzzy-tier queries: rows-only checks (no SQL oracle possible) -----
 
 def q_minhash_signatures(spark, sf_dir):
-    sigs = _sigs(_files(spark, sf_dir))
+    sigs = _engine_run(spark, sf_dir)["sigs"]
     return sigs.select("file_id", "n_shingles", "simhash",
                        F.element_at("minhash", 1).alias("minhash_0"))
 
 
 def q_lsh_candidate_pairs(spark, sf_dir):
-    sigs = _sigs(_files(spark, sf_dir))
-    pairs, _ = candidate_pairs(sigs, CFG)
-    return score_pairs(pairs, sigs, CFG).select(
+    run = _engine_run(spark, sf_dir)
+    pairs, _ = candidate_pairs(run["sigs"], CFG)
+    return score_pairs(pairs, run["sigs"], CFG, run["files"]).select(
         "src", "dst", F.round("est_jaccard", 4).alias("est_jaccard_r"),
         "hamming", F.round("containment", 4).alias("containment_r"),
     )
 
 
-def _keyed_handles(spark) -> dict:
-    """Session-scoped registry of persisted `labeled` frames from
-    previous keyed queries, keyed by the sf_dir that built them: a new
-    keyed query retires ONLY its own predecessor (same session +
-    corpus), so two pipelines interleaved in one driver process never
-    unpersist each other's caches, while a long driver session still
-    doesn't accumulate pinned storage (one live handle per corpus).
-    Stored ON the session object (mirror of the owner-scoped
-    ScorerCache in operators/verify.py) so the registry's lifetime is
-    the session's, not the module's."""
-    reg = getattr(spark, "_uncp_keyed_handles", None)
-    if reg is None:
-        reg = {}
-        spark._uncp_keyed_handles = reg
-    return reg
-
-
 def _near_dup_keyed(spark, sf_dir):
-    """Full-pipeline cluster membership re-keyed for the oracle: the
+    """The engine run's cluster membership re-keyed for the oracle: the
     engine's cluster_id is min(file_id)=min(xxhash64) — not computable in
     DuckDB — so clusters are presented by ``cluster_key`` = min
     ``repo|path`` member string, an order-isomorphic relabeling that
     preserves the partition exactly (the thing the north_rule's
     "matching cluster assignments" gate compares)."""
-    # persisted: ckey aggregates the SAME labeled plan the join streams,
-    # so without the pin the whole ingest→signature→LSH→verify lineage
-    # would execute twice per oracle query. Managed HERE (the SAME
-    # (session, sf_dir)'s previous keyed frame is retired when its next
-    # keyed query is built — other sessions/corpora keep their pins) —
-    # not via verify's scorer cache, whose release fires at
-    # plan-construction time of any score_pairs call and could drop the
-    # pin before this query's collect.
-    handles = _keyed_handles(spark)
-    prev = handles.pop(sf_dir, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    labeled = _near_dup_labeled(spark, sf_dir).persist()
-    handles[sf_dir] = labeled
+    labeled = _engine_run(spark, sf_dir)["labeled"]
     ckey = labeled.groupBy("cluster_id").agg(
         F.min(F.concat_ws("|", "repo", "path")).alias("cluster_key")
     )
@@ -421,11 +345,12 @@ def _near_dup_keyed(spark, sf_dir):
 
 
 def q_near_dup_clusters(spark, sf_dir):
-    """END-TO-END pipeline oracle (ingest → sigs → LSH → verify → CC →
-    membership). The DuckDB twin computes the accepted edge set from
-    first principles — exact 5-token-shingle Jaccard ≥ 0.7 OR shingle
-    containment ≥ 0.9 over distinct contents — and clusters it with a
-    recursive transitive-closure CTE (independent algorithm). The edge
+    """END-TO-END pipeline oracle: the membership of the engine run
+    (ingest → sigs → LSH + containment index → verify → CC). The DuckDB
+    twin computes the accepted edge set from first principles — exact
+    5-token-shingle Jaccard ≥ 0.7 OR shingle containment ≥ 0.9 over
+    distinct contents — and clusters it with a recursive
+    transitive-closure CTE (independent algorithm). The edge
     sets are PROVABLY equal on this corpus: acceptance is deterministic
     (seed-pinned signatures; exact-Jaccard ride-along repairs estimate
     undershoot; every overshoot-risk pair here has containment 1.0, so
@@ -474,14 +399,6 @@ def q_near_dup_priority(spark, sf_dir):
     return stats.withColumn("priority_rank", F.row_number().over(w))
 
 
-def q_language_id(spark, sf_dir):
-    """Marker-set language ID (functions/text.py) — oracle-checked: the
-    DuckDB side recomputes per-language stopword hits and takes the same
-    (hits DESC, lang DESC) argmax, 'unknown' when no marker appears."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select("doc_id", lang_id(F.col("text")).alias("lang_guess"))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # exact tier + group relations (oracle-checked)
@@ -493,15 +410,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "files_by_lang": q_files_by_lang,
         "path_predicates": q_path_predicates,
         "glob_path_filter": q_glob_path_filter,
-        # training-pipeline functions (oracle-checked)
-        "text_quality": q_text_quality,
-        "token_stats_by_lang": q_token_stats_by_lang,
+        # exact-Jaccard, LSH-recall and shingle oracles (oracle-checked)
         "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
         "lsh_recall_vs_bruteforce": q_lsh_recall_vs_bruteforce,
         "cc_bruteforce": q_cc_bruteforce,
         "shingle_stats": q_shingle_stats,
-        "fingerprint_cardinality": q_fingerprint_cardinality,
-        "language_id": q_language_id,
         # full-pipeline end-to-end (oracle-checked: recursive-closure
         # twin over the first-principles accepted edge set)
         "near_dup_clusters": q_near_dup_clusters,
@@ -660,44 +573,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE (path GLOB 'docs/*' OR path GLOB 'vendored/*')
               AND NOT path GLOB '*doc_1*.txt'
         """,
-        "text_quality": """
-            WITH t AS (
-              SELECT doc_id, text,
-                     trim(regexp_replace(text, '\\s+', ' ', 'g')) AS norm
-              FROM documents
-            ), m AS (
-              SELECT doc_id,
-                     CASE WHEN strlen(norm) = 0 THEN 0
-                          ELSE len(string_split(norm, ' ')) END AS n_tokens,
-                     length(text)::DOUBLE AS n_chars,
-                     strlen(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE
-                       AS alpha_chars
-              FROM t
-            )
-            SELECT doc_id, n_tokens,
-                   round((
-                     alpha_chars / greatest(n_chars, 1.0)
-                     + (CASE WHEN n_tokens BETWEEN 5 AND 100000 THEN 1.0 ELSE 0.0 END)
-                     + (CASE WHEN n_chars / greatest(n_tokens, 1) BETWEEN 2.0 AND 12.0
-                             THEN 1.0 ELSE 0.0 END)
-                   ) / 3.0, 6) AS quality
-            FROM m
-        """,
-        "token_stats_by_lang": """
-            WITH t AS (
-              SELECT lang,
-                     CASE WHEN strlen(trim(regexp_replace(text, '\\s+', ' ', 'g'))) = 0
-                          THEN 0
-                          ELSE len(string_split(
-                                 trim(regexp_replace(text, '\\s+', ' ', 'g')), ' '))
-                     END AS n_tokens
-              FROM documents
-            )
-            SELECT lang, count(*) AS n_docs,
-                   round(avg(n_tokens), 4) AS avg_tokens,
-                   sum(n_tokens)::BIGINT AS sum_tokens
-            FROM t GROUP BY lang
-        """,
         "ngram_jaccard_pairs": """
             WITH toks AS (
               SELECT doc_id,
@@ -762,51 +637,6 @@ def oracle_sql() -> dict[str, str]:
                       )))
                     END)::INT AS n_shingles
             FROM tok
-        """,
-        "fingerprint_cardinality": """
-            SELECT count(DISTINCT lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
-                     AS n_norm,
-                   count(DISTINCT lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
-                     AS n_fp
-            FROM documents
-        """,
-        "language_id": """
-            WITH t AS (
-              SELECT doc_id,
-                     string_split(
-                       lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '
-                     ) AS toks
-              FROM documents
-            ), s AS (
-              SELECT doc_id, 'en' AS lang,
-                     len(list_filter(toks,
-                       x -> list_contains(['the','and','of','to','is'], x))) AS hits
-              FROM t
-              UNION ALL
-              SELECT doc_id, 'de',
-                     len(list_filter(toks,
-                       x -> list_contains(['der','die','und','ist','nicht'], x)))
-              FROM t
-              UNION ALL
-              SELECT doc_id, 'fr',
-                     len(list_filter(toks,
-                       x -> list_contains(['le','la','les','et','est'], x)))
-              FROM t
-              UNION ALL
-              SELECT doc_id, 'es',
-                     len(list_filter(toks,
-                       x -> list_contains(['el','los','que','es','una'], x)))
-              FROM t
-            ), best AS (
-              SELECT doc_id, lang, hits,
-                     row_number() OVER (
-                       PARTITION BY doc_id ORDER BY hits DESC, lang DESC
-                     ) AS rn
-              FROM s
-            )
-            SELECT doc_id,
-                   CASE WHEN hits > 0 THEN lang ELSE 'unknown' END AS lang_guess
-            FROM best WHERE rn = 1
         """,
         "lsh_recall_vs_bruteforce": f"""
             {_REPOS},

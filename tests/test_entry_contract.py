@@ -92,3 +92,33 @@ def test_entry_smoke(spark):
     assert df.count() > 0
     cols = set(df.columns)
     assert {"cluster_id", "dup_count", "bytes_reclaimable", "priority_rank"} <= cols
+
+
+def test_entry_returns_the_engine_runs_clusters(spark):
+    got = entrymod.entry(spark)
+    want = entrymod._engine_run(spark, SF)["clusters"]
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_second_engine_query_resumes_every_stage(spark, sf_dir, monkeypatch):
+    """Engine queries share one DedupPipeline.run per session and
+    corpus: the second query's run builds no stage."""
+    reports = []
+    run = entrymod.DedupPipeline.run
+
+    def recording_run(self, *args, **kwargs):
+        out = run(self, *args, **kwargs)
+        reports.append(out["report"])
+        return out
+
+    monkeypatch.setattr(entrymod.DedupPipeline, "run", recording_run)
+    qs = entrymod.queries()
+    qs["minhash_signatures"](spark, sf_dir).count()
+    qs["near_dup_clusters"](spark, sf_dir).count()
+    assert len(reports) == 2
+    stages = reports[1]["stages"]
+    assert [s["stage"] for s in stages] == [
+        "files", "sigs", "pairs", "edges", "labels", "clusters"
+    ]
+    assert all(s["resumed"] for s in stages), stages

@@ -124,7 +124,7 @@ def test_shingle_sets_recompute_bit_identical(spark, repos_df, cfg):
 def test_skinny_signature_table_yields_identical_edges(spark, repos_df, cfg):
     """Production shape: signature table WITHOUT shingle arrays (they
     never cross Arrow), verify recomputing them for residual members —
-    accepted edge set must equal the fat path's exactly."""
+    accepted edge set must equal the one from the fat table exactly."""
     from uncp_spark.operators.exact import exact_representatives
     from uncp_spark.operators.ingest import ingest
     from uncp_spark.operators.lsh import candidate_pairs
@@ -139,26 +139,11 @@ def test_skinny_signature_table_yields_identical_edges(spark, repos_df, cfg):
 
     pf, _ = candidate_pairs(fat, cfg)
     ps, _ = candidate_pairs(skinny, cfg)
-    ef = accept_edges(score_pairs(pf, fat, cfg), cfg)
+    ef = accept_edges(score_pairs(pf, fat, cfg, files), cfg)
     es = accept_edges(score_pairs(ps, skinny, cfg, files=files), cfg)
     rows_f = {(r.src, r.dst, round(r.score, 6), r.edge_type) for r in ef.collect()}
     rows_s = {(r.src, r.dst, round(r.score, 6), r.edge_type) for r in es.collect()}
     assert rows_f == rows_s and rows_f
-
-
-def test_score_pairs_without_shingles_or_files_raises(spark, repos_df, cfg):
-    from uncp_spark.operators.exact import exact_representatives
-    from uncp_spark.operators.ingest import ingest
-    from uncp_spark.operators.lsh import candidate_pairs
-    from uncp_spark.operators.signatures import signature_table
-    from uncp_spark.operators.verify import score_pairs
-
-    files = ingest(repos_df)
-    skinny = signature_table(exact_representatives(files), cfg,
-                             include_shingles=False)
-    pairs, _ = candidate_pairs(skinny, cfg)
-    with pytest.raises(ValueError, match="shingles"):
-        score_pairs(pairs, skinny, cfg)
 
 
 def test_skinny_fused_udf_return_type_excludes_shingle_arrays():

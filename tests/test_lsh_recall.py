@@ -19,8 +19,12 @@ from uncp_spark.operators.verify import accept_edges, score_pairs
 
 
 @pytest.fixture(scope="module")
-def sigs(spark, cfg, repos_df):
-    files = ingest(repos_df)
+def files(repos_df):
+    return ingest(repos_df)
+
+
+@pytest.fixture(scope="module")
+def sigs(spark, cfg, files):
     reps = exact_representatives(files)
     # bottomk kept: the verify stage's sketch screen runs in the loop
     out = (
@@ -52,12 +56,12 @@ def test_band_keys_shape(sigs, cfg):
     assert bk.groupBy("file_id").count().filter(F.col("count") != cfg.bands).count() == 0
 
 
-def test_recall_gate(spark, cfg, sigs):
+def test_recall_gate(spark, cfg, sigs, files):
     truth = _true_jaccard_pairs(sigs, cfg.jaccard_threshold)
     assert len(truth) >= 10, "fixture must plant enough near-dup pairs"
 
     pairs, hot = candidate_pairs(sigs, cfg)
-    edges = accept_edges(score_pairs(pairs, sigs, cfg), cfg)
+    edges = accept_edges(score_pairs(pairs, sigs, cfg, files), cfg)
     got = {(r["src"], r["dst"]) for r in edges.select("src", "dst").collect()}
 
     recalled = truth & got
@@ -73,9 +77,9 @@ def test_candidate_precision_reasonable(spark, cfg, sigs):
     assert pairs.count() < n * 10
 
 
-def test_accepted_edges_respect_thresholds(spark, cfg, sigs):
+def test_accepted_edges_respect_thresholds(spark, cfg, sigs, files):
     pairs, _ = candidate_pairs(sigs, cfg)
-    scored = score_pairs(pairs, sigs, cfg)
+    scored = score_pairs(pairs, sigs, cfg, files)
     edges = accept_edges(scored, cfg)
     # accept_edges' full rule: the exact Jaccard (residual phase) counts
     # too; NULL containment/jaccard means "not evaluated", never "passed"
@@ -109,7 +113,7 @@ def test_hot_band_cap(spark, cfg):
     assert pairs_capped.count() <= full_pairs.count()
 
 
-def test_edges_carry_evidence_json(spark, cfg, sigs):
+def test_edges_carry_evidence_json(spark, cfg, sigs, files):
     """Accepted edges expose a per-pair `data` JSON evidence blob (uncp
     DESIGN.md:109-117: pairwise relations carry relation_type + data):
     every measurement that informed acceptance, parseable, and
@@ -117,7 +121,7 @@ def test_edges_carry_evidence_json(spark, cfg, sigs):
     import json
 
     pairs, _ = candidate_pairs(sigs, cfg)
-    edges = accept_edges(score_pairs(pairs, sigs, cfg), cfg).collect()
+    edges = accept_edges(score_pairs(pairs, sigs, cfg, files), cfg).collect()
     assert edges
     for r in edges:
         ev = json.loads(r["data"])

@@ -91,7 +91,7 @@ def test_lsh_pipeline_has_no_cartesian_product(spark):
     files = ingest(repos_from_documents(spark, SF_DIR))
     sigs = signature_table(exact_representatives(files), CFG)
     pairs, _hot = candidate_pairs(sigs, CFG)
-    edges = accept_edges(score_pairs(pairs, sigs, CFG), CFG)
+    edges = accept_edges(score_pairs(pairs, sigs, CFG, files), CFG)
     plan = _fmt(edges)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

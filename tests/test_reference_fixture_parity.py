@@ -67,10 +67,10 @@ def test_exact_tier_matches_reference_fixture(spark, ref_repos):
 def test_fuzzy_tier_coclusters_near_variants(spark, ref_repos):
     files = ingest(ref_repos)
     sigs = signature_table(exact_representatives(files), CFG).select(
-        "file_id", "minhash", "simhash", "shingles"
+        "file_id", "minhash", "simhash", "bottomk"
     )
     pairs, _ = candidate_pairs(sigs, CFG)
-    near = accept_edges(score_pairs(pairs, sigs, CFG), CFG)
+    near = accept_edges(score_pairs(pairs, sigs, CFG, files), CFG)
     edges = near.select("src", "dst").unionByName(
         exact_cluster_edges(files).select("src", "dst")
     )

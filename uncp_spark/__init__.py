@@ -22,12 +22,13 @@ Pipeline (SURVEY.md §7.1):
       → priority scores (bytes reclaimable, dup count, path depth)
 
 Containment is found one way: the bottom-k sketch index proposes the
-candidates and verify computes their exact shingle containment. Beside
-this engine the package holds the text functions the query entry point
-(``__spark_entry__``) calls. Every module is imported on the way from ``DedupPipeline.run``, the
-command surface, the ``--py-files`` packaging seam or the query entry
-point, and every top-level function and class is named somewhere
-outside its own definition (tests/test_reachability.py).
+candidates and verify computes their exact shingle containment. The
+query entry point (``__spark_entry__``) reads one ``DedupPipeline.run``
+per session and corpus rather than a stage graph of its own. Every
+module is imported on the way from ``DedupPipeline.run``, the command
+surface, the ``--py-files`` packaging seam or the query entry point,
+and every top-level function and class is named somewhere outside its
+own definition (tests/test_reachability.py).
 
 Every stage checkpoints to Parquet with a manifest + per-partition
 metrics so a killed job resumes mid-pipeline (uncp's atomic save,

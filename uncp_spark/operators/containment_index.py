@@ -55,7 +55,7 @@ from uncp_spark.operators.lsh import (
 )
 
 
-def containment_entries(sigs: DataFrame, id_col: str = "file_id") -> DataFrame:
+def containment_entries(sigs: DataFrame) -> DataFrame:
     """(shid, file_id, n) inverted-index rows from the bottom-m sketches.
 
     ``n`` is the file's exact shingle-set cardinality, carried inline so
@@ -63,16 +63,14 @@ def containment_entries(sigs: DataFrame, id_col: str = "file_id") -> DataFrame:
     the signature table (8 bytes/row against a skinny-join's extra
     exchange of the whole index)."""
     return sigs.select(
-        F.col(id_col).alias("file_id"),
+        "file_id",
         F.col("n_shingles").cast("long").alias("n"),
         F.explode("bottomk").alias("shid"),
     )
 
 
 def _containment_pair_rows(
-    sigs: DataFrame,
-    cfg: SimilarityConfig,
-    id_col: str = "file_id",
+    sigs: DataFrame, cfg: SimilarityConfig
 ) -> tuple[DataFrame, DataFrame, bool]:
     """→ (raw_pairs(src < dst) — ONE ROW PER SHARED SKETCH ID, i.e.
     before the shared-count aggregation — hot_shingle_report, interned).
@@ -85,7 +83,7 @@ def _containment_pair_rows(
     When ``interned`` is True the pair ids are still ``binary(16)``
     (lsh.intern_hex_id): the caller restores hex with ``extern_hex_id``
     after its own (src, dst) exchange, or before a union with hex ids."""
-    ent = containment_entries(sigs, id_col)
+    ent = containment_entries(sigs)
     # shuffle-interior id interning (see lsh.intern_hex_id): the index
     # carries an id in every entry row and bucket array; binary(16)
     # halves that vs the hex string. Hex in; the caller externs.
@@ -150,12 +148,10 @@ def _containment_pair_rows(
 
 
 def containment_candidates(
-    sigs: DataFrame,
-    cfg: SimilarityConfig,
-    id_col: str = "file_id",
+    sigs: DataFrame, cfg: SimilarityConfig
 ) -> tuple[DataFrame, DataFrame]:
     """→ (pairs(src < dst, from_hot_band=False), hot_shingle_report)."""
-    raw, hot_report, interned = _containment_pair_rows(sigs, cfg, id_col)
+    raw, hot_report, interned = _containment_pair_rows(sigs, cfg)
     # the (src, dst) exchange carries interned ids; hex only after it
     pairs = (
         raw.groupBy("src", "dst")
@@ -176,9 +172,7 @@ def containment_candidates(
 
 
 def combined_candidate_pairs(
-    sigs: DataFrame,
-    cfg: SimilarityConfig,
-    id_col: str = "file_id",
+    sigs: DataFrame, cfg: SimilarityConfig
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """LSH band candidates ∪ containment-sketch candidates, deduped →
     (pairs(src, dst, from_hot_band), hot_band_report, hot_shingle_report).
@@ -196,10 +190,8 @@ def combined_candidate_pairs(
     (measured ~1 s at the 40k bench corpus). A pair is kept iff the
     band tier proposed it OR it shares ≥ min_shared sketch ids — exactly
     the union of the two tiers' standalone outputs."""
-    lsh_pairs, hot_bands = candidate_pairs(sigs, cfg, id_col=id_col)
-    cont_raw, hot_shingles, interned = _containment_pair_rows(
-        sigs, cfg, id_col=id_col
-    )
+    lsh_pairs, hot_bands = candidate_pairs(sigs, cfg)
+    cont_raw, hot_shingles, interned = _containment_pair_rows(sigs, cfg)
     if interned:  # the band tier's pairs are hex
         cont_raw = extern_hex_id(cont_raw, "src", "dst")
     u = lsh_pairs.select(

@@ -30,10 +30,11 @@ MAX_GROUP_MEMBERS = 1000
 
 
 def _group_relation(
-    files: DataFrame, key: str, out_key: str, min_count: int = 2,
+    files: DataFrame, key: str, out_key: str,
     max_members: int = MAX_GROUP_MEMBERS,
 ) -> DataFrame:
-    """``file_paths`` holds the sorted member paths for groups of at most
+    """One row per ``key`` value shared by two or more files.
+    ``file_paths`` holds the sorted member paths for groups of at most
     ``max_members``; groups past the cap get an EMPTY list (count-only
     row). ``file_count``/``total_size``/``first_seen`` always cover the
     FULL group, so truncation is detectable, not silent:
@@ -69,9 +70,10 @@ def _group_relation(
         # F7: relation tables carry first_seen (i64 ns-epoch), matching
         # uncp's relation schemas (src/relations.rs:330,360,386)
         aggs.append(F.min("processed_at").alias("first_seen"))
-    counts = skinny.groupBy(F.col(key).alias(out_key)).agg(*aggs)
-    if min_count > 1:
-        counts = counts.filter(F.col("file_count") >= min_count)
+    counts = (
+        skinny.groupBy(F.col(key).alias(out_key)).agg(*aggs)
+        .filter(F.col("file_count") >= 2)
+    )
     over_cap = counts.filter(F.col("file_count") > max_members)
     members = (
         skinny.select(F.col(key).alias(out_key), "path")
@@ -85,19 +87,19 @@ def _group_relation(
     ).select(out_key, "file_paths", *[c for c in counts.columns if c != out_key])
 
 
-def exact_clusters(files: DataFrame, min_count: int = 2) -> DataFrame:
+def exact_clusters(files: DataFrame) -> DataFrame:
     """groupBy(sha256) → member lists. uncp IdenticalHashes semantics."""
-    return _group_relation(files, "sha256", "hash_value", min_count).withColumn(
+    return _group_relation(files, "sha256", "hash_value").withColumn(
         "hash_type", F.lit("sha256")
     )
 
 
-def same_name_groups(files: DataFrame, min_count: int = 2) -> DataFrame:
-    return _group_relation(files, "filename", "filename_key", min_count)
+def same_name_groups(files: DataFrame) -> DataFrame:
+    return _group_relation(files, "filename", "filename_key")
 
 
-def same_size_groups(files: DataFrame, min_count: int = 2) -> DataFrame:
-    return _group_relation(files, "size", "size_bytes", min_count)
+def same_size_groups(files: DataFrame) -> DataFrame:
+    return _group_relation(files, "size", "size_bytes")
 
 
 def exact_cluster_edges(files: DataFrame) -> DataFrame:

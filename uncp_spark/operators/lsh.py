@@ -48,16 +48,16 @@ def extern_hex_id(df: DataFrame, *cols: str) -> DataFrame:
     return df.withColumns({c: F.lower(F.hex(c)) for c in cols})
 
 
-def band_keys(sigs: DataFrame, cfg: SimilarityConfig,
-              sig_col: str = "minhash", id_col: str = "file_id") -> DataFrame:
-    """(file_id, band, band_hash) — one row per file per band."""
+def band_keys(sigs: DataFrame, cfg: SimilarityConfig) -> DataFrame:
+    """(file_id, band, band_hash) — one row per file per band of its
+    ``minhash``."""
     r = cfg.rows_per_band
     slices = F.transform(
         F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
-        lambda i: F.slice(F.col(sig_col), i * r + 1, r),
+        lambda i: F.slice(F.col("minhash"), i * r + 1, r),
     )
     return (
-        sigs.select(F.col(id_col).alias("file_id"), F.posexplode(slices).alias("band", "band_sig"))
+        sigs.select("file_id", F.posexplode(slices).alias("band", "band_sig"))
         .select("file_id", "band", F.xxhash64("band", "band_sig").alias("band_hash"))
     )
 
@@ -97,16 +97,14 @@ def _explode_pairs(bucket_df: DataFrame, ids_col: str = "ids",
 
 
 def candidate_pairs(
-    sigs: DataFrame,
-    cfg: SimilarityConfig,
-    id_col: str = "file_id",
+    sigs: DataFrame, cfg: SimilarityConfig
 ) -> tuple[DataFrame, DataFrame]:
     """→ (pairs(src < dst), hot_bucket_report).
 
     pairs carries ``from_hot_band`` so downstream metrics can separate
     full-fidelity candidates from degraded hot-bucket stars.
     """
-    bk = band_keys(sigs, cfg, id_col=id_col)
+    bk = band_keys(sigs, cfg)
     # shuffle-interior id interning: every exchange below carries ids in
     # every row (bucket arrays, pair rows); 16-byte binary halves that
     # payload vs the 32-char hex string and compares faster. Checkpoint

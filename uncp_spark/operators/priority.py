@@ -18,8 +18,7 @@ single-partition window: range-repartition on the order keys →
 row_number within each (already range-ordered) partition → add the
 per-partition row-count offsets (a tiny driver-side array, like the CC
 convergence checksum). Exact global ranks, every step distributed,
-balanced regardless of value skew. ``top_k`` short-circuits to
-orderBy+limit when only the head of the ranking is needed.
+balanced regardless of value skew.
 """
 
 from __future__ import annotations
@@ -28,9 +27,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def cluster_stats(labeled_files: DataFrame, min_count: int = 2) -> DataFrame:
+def cluster_stats(labeled_files: DataFrame) -> DataFrame:
     """labeled files(file_id, cluster_id, size, depth, path, repo) →
-    one row per cluster with priority inputs."""
+    one row per cluster of two or more files with priority inputs."""
     return (
         labeled_files.groupBy("cluster_id")
         .agg(
@@ -40,7 +39,7 @@ def cluster_stats(labeled_files: DataFrame, min_count: int = 2) -> DataFrame:
             F.min("depth").alias("min_depth"),
             F.countDistinct("repo").alias("n_repos"),
         )
-        .filter(F.col("dup_count") >= min_count)
+        .filter(F.col("dup_count") >= 2)
     )
 
 
@@ -54,10 +53,9 @@ def _priority_order() -> list:
     ]
 
 
-def global_rank(df: DataFrame, order: list, band: "F.Column",
-                rank_col: str = "priority_rank") -> DataFrame:
-    """Exact global row_number over ``order`` with NO single-partition
-    window.
+def global_rank(df: DataFrame, order: list, band: "F.Column") -> DataFrame:
+    """Exact global row_number over ``order`` as ``priority_rank``, with
+    NO single-partition window.
 
     ``band`` must be a deterministic integer expression of the row that
     COARSENS the order: band(a) < band(b) ⇒ a sorts before b (for the
@@ -117,7 +115,8 @@ def global_rank(df: DataFrame, order: list, band: "F.Column",
     ).select("_s._band", "_s._offset")
     return (
         local.join(F.broadcast(offsets), "_band")
-        .withColumn(rank_col, (F.col("_offset") + F.col("_local_rank")).cast("int"))
+        .withColumn("priority_rank",
+                    (F.col("_offset") + F.col("_local_rank")).cast("int"))
         .drop("_band", "_local_rank", "_offset")
     )
 
@@ -129,24 +128,13 @@ def _priority_band() -> "F.Column":
     return (F.lit(64) - F.floor(F.log2(F.col("bytes_reclaimable") + 2))).cast("int")
 
 
-def priority_ranked(clusters: DataFrame, top_k: int | None = None) -> DataFrame:
+def priority_ranked(clusters: DataFrame) -> DataFrame:
     """Ranked dedup candidates — bytes reclaimable first, then dup count,
     then shallowest path. ``metadata`` carries the score inputs as a JSON
     blob (uncp's group metadata field, src/relations.rs:415 / F9) and
     ``reclaimable_human`` the B/KB/MB rendering (tui df_render F10).
-
-    ``top_k``: rank only the best K clusters (orderBy+limit — the right
-    call for interactive views at 100 TB); default ranks everything via
-    the distributed ``global_rank``."""
-    order = _priority_order()
-    if top_k is not None:
-        # rank the bounded head via the same banded path: a global
-        # Window.orderBy here (even over ≤ top_k rows) logs the
-        # single-partition WindowExec warning on every run
-        head = clusters.orderBy(*order).limit(top_k)
-        ranked = global_rank(head, order, _priority_band())
-    else:
-        ranked = global_rank(clusters, order, _priority_band())
+    Every cluster is ranked by the distributed ``global_rank``."""
+    ranked = global_rank(clusters, _priority_order(), _priority_band())
     return (
         ranked.withColumn(
             "metadata",

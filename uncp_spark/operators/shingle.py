@@ -38,11 +38,7 @@ def _char_shingle_hashes(norm: Column, k: int) -> Column:
     )
 
 
-def with_token_hashes(
-    df: DataFrame,
-    cfg: SimilarityConfig,
-    content_col: str = "content",
-) -> DataFrame:
+def with_token_hashes(df: DataFrame, cfg: SimilarityConfig) -> DataFrame:
     """Minimal JVM prelude for the FUSED signature stage: ``norm_text``,
     ``token_hashes`` and (short rows only) ``char_hashes``.
 
@@ -51,7 +47,7 @@ def with_token_hashes(
     (operators/signatures.signature_table), so the JVM never allocates
     per-window slices. ``char_hashes`` materializes only for rows under
     ``shingle_k`` tokens (the fallback population, typically ≪1%)."""
-    norm = normalize_content(F.col(content_col))
+    norm = normalize_content(F.col("content"))
     df = df.withColumn("norm_text", norm)
     tokens = F.split(F.col("norm_text"), " ")
     df = df.withColumn("token_hashes", F.transform(tokens, lambda t: F.xxhash64(t)))

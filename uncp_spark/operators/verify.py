@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from uncp_spark.config import SimilarityConfig
+from uncp_spark.operators.signatures import shingle_sets
 
 
 @lru_cache(maxsize=8)
@@ -116,11 +117,10 @@ def release_scored_cache() -> None:
 
 
 def score_pairs(
-    pairs: DataFrame, sigs: DataFrame, cfg: SimilarityConfig,
-    files: DataFrame | None = None,
+    pairs: DataFrame, sigs: DataFrame, cfg: SimilarityConfig, files: DataFrame,
 ) -> DataFrame:
-    """pairs(src, dst) × sigs(file_id, minhash, simhash[, shingles]) →
-    scored pairs.
+    """pairs(src, dst, from_hot_band) × sigs(file_id, minhash, simhash,
+    bottomk) → scored pairs, with shingle sets recomputed from ``files``.
 
     Two-phase to keep the shuffle thin: phase 1 joins only the fixed-
     width signatures (minhash ~1 KB + simhash 8 B per side) and decides
@@ -131,22 +131,17 @@ def score_pairs(
     phase-1 winners report containment = NULL, meaning 'not
     evaluated'), and only for those pairs' member ids.
 
-    Phase 1.5 (``cfg.containment_screen``, on when ``sigs`` carries the
-    ``bottomk`` sketch): residual pairs that the fixed-width bottom-k
-    sketches certify below EVERY acceptance threshold — exact binomial
-    tails, see config — skip the fat path entirely and come back with
-    containment/jaccard = NULL. The fat recompute then scales with the
+    Phase 1.5 (``cfg.containment_screen``): residual pairs that the
+    fixed-width bottom-k sketches certify below EVERY acceptance
+    threshold — exact binomial tails, see config — skip the fat path
+    entirely and come back with containment/jaccard = NULL. The fat recompute then scales with the
     surviving (plausible) pairs' member set, not with containment-tier
     candidate noise.
 
-    Shingle source, in preference order:
-      - ``sigs.shingles`` when the caller kept the column (oracle
-        queries do) — one column-pruned scan, semi-joined to residuals;
-      - otherwise RECOMPUTED from ``files`` content for exactly the
-        residual member set (signatures.shingle_sets — bit-identical
-        ids, same kernel). This is the production path: the signature
-        stage then never ships its fat shingle arrays through Arrow or
-        into the checkpoint at all."""
+    The shingle sets are RECOMPUTED from ``files`` content for exactly
+    the residual member set (signatures.shingle_sets — bit-identical
+    ids, same kernel), so the signature stage never ships its fat
+    shingle arrays through Arrow or into the checkpoint at all."""
     mh = sigs.select("file_id", "minhash", "simhash")
     a = mh.select(
         F.col("file_id").alias("src"),
@@ -191,7 +186,7 @@ def score_pairs(
     )
     residual_base = phase1.filter(~accepted1)
     screened_out = None
-    if cfg.containment_screen and "bottomk" in sigs.columns:
+    if cfg.containment_screen:
         # phase 1.5 — bottom-k sketch screen (see config.containment_screen
         # for the estimator and its recall bounds). The fat path below
         # scales with the number of residual MEMBERS (a full shingle
@@ -263,27 +258,17 @@ def score_pairs(
         screened_out = decided.filter(~F.col("_keep")).select(*base_cols)
         residual_base = decided.filter("_keep").select(*base_cols)
     # shingle arrays only for files that actually appear in a residual
-    # pair: one scan of the signature table, shuffle sized to residuals
+    # pair: the recompute is sized to residual members
     need = (
         residual_base.select(F.col("src").alias("file_id"))
         .unionByName(residual_base.select(F.col("dst").alias("file_id")))
         .distinct()
     )
-    if "shingles" in sigs.columns:
-        sg = sigs.select("file_id", "shingles").join(need, "file_id", "left_semi")
-    elif files is not None:
-        from uncp_spark.operators.signatures import shingle_sets
-
-        # persisted: BOTH join sides (sa, sb) scan sg — without the
-        # pin the tokenize+UDF recompute would run twice
-        sg = cache.add(
-            shingle_sets(files, cfg, ids=need).persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    else:
-        raise ValueError(
-            "sigs has no 'shingles' column and no files frame was given "
-            "to recompute them for the residual set"
-        )
+    # persisted: BOTH join sides (sa, sb) scan sg — without the pin the
+    # tokenize+UDF recompute would run twice
+    sg = cache.add(
+        shingle_sets(files, cfg, ids=need).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     sa = sg.select(F.col("file_id").alias("src"), F.col("shingles").alias("sg_a"))
     sb = sg.select(F.col("file_id").alias("dst"), F.col("shingles").alias("sg_b"))
     inter = F.size(F.array_intersect("sg_a", "sg_b")).cast("double")
@@ -327,7 +312,7 @@ def score_pairs(
 
 
 def accept_edges(scored: DataFrame, cfg: SimilarityConfig) -> DataFrame:
-    """Threshold filter → edges(src, dst, score, edge_type).
+    """``score_pairs`` output → edges(src, dst, score, edge_type, data).
 
     ``jaccard`` (exact, residual-phase only) outranks the estimate: a
     pair whose true Jaccard clears the threshold is an edge even when
@@ -345,33 +330,24 @@ def accept_edges(scored: DataFrame, cfg: SimilarityConfig) -> DataFrame:
     no recall gain; near-dup dedup pipelines bound FALSE NEGATIVES (a
     missed dup survives forever), while a borderline false positive
     merely groups two ~0.68-similar files for human review."""
-    has_jaccard = "jaccard" in scored.columns
-    exact_ok = (
-        (F.col("jaccard") >= cfg.jaccard_threshold)
-        if has_jaccard else F.lit(False)
-    )
+    exact_ok = F.col("jaccard") >= cfg.jaccard_threshold
     cond = (
         (F.col("est_jaccard") >= cfg.jaccard_threshold)
         | (F.col("hamming") <= cfg.hamming_threshold)
         | (F.col("containment") >= cfg.containment_threshold)
         | exact_ok
     )
-    score_cols = ["est_jaccard", "containment"] + (["jaccard"] if has_jaccard else [])
     # per-pair evidence blob (uncp DESIGN.md:109-117: pairwise relations
     # carry a typed `data` JSON column alongside relation_type): every
     # measurement that informed acceptance, so a reviewer of a dedup
     # candidate can see WHY the edge exists without re-scoring. to_json
     # omits null fields, so phase-1 winners (containment/jaccard never
     # evaluated) stay compact.
-    evidence = [F.col("est_jaccard"), F.col("hamming"), F.col("containment")]
-    if has_jaccard:
-        evidence.append(F.col("jaccard"))
-    if "from_hot_band" in scored.columns:
-        evidence.append(F.col("from_hot_band"))
+    evidence = ["est_jaccard", "hamming", "containment", "jaccard", "from_hot_band"]
     return scored.filter(cond).select(
         "src",
         "dst",
-        F.greatest(*score_cols).alias("score"),
+        F.greatest("est_jaccard", "containment", "jaccard").alias("score"),
         F.when(F.col("containment") >= cfg.containment_threshold, "containment")
         .when(F.col("est_jaccard") >= cfg.jaccard_threshold, "minhash")
         .when(exact_ok, "jaccard")

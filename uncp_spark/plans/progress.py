@@ -9,14 +9,14 @@ to ``<base_dir>/_metrics/progress.jsonl`` WHILE jobs execute, and
 exposes them as a DataFrame/SQL view.
 
 Mechanism: a daemon thread samples ``SparkContext.statusTracker()``
-(active stages → StageInfo task counters) every ``interval`` seconds.
+(active stages → StageInfo task counters) every 0.25 s.
 A JVM SparkListener via the Py4J callback server would push instead of
 poll, but it requires an open callback socket per driver and is the
 classic source of shutdown hangs in python drivers; the poller reads
 the same scheduler state with no JVM-side registration, degrades to
 zero rows when the pipeline is idle, and works identically under
 spark-submit. At 1000 executors this is one driver-local RPC per
-interval — cost independent of cluster size.
+sample — cost independent of cluster size.
 
 The JSONL file is truncated per run (so repeated runs on one base_dir
 never grow it without bound or mix historical runs) and line-atomic
@@ -40,6 +40,7 @@ PROGRESS_SCHEMA = (
     "stage_name string, num_tasks int, completed_tasks int, active_tasks int, "
     "failed_tasks int"
 )
+_INTERVAL_S = 0.25  # seconds between samples
 
 
 class ProgressReporter:
@@ -51,18 +52,11 @@ class ProgressReporter:
     UI and the metrics table tell the same story.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        out_dir: str,
-        interval: float = 0.25,
-        run_id: str | None = None,
-    ) -> None:
+    def __init__(self, spark: SparkSession, out_dir: str) -> None:
         self._spark = spark
         self._dir = out_dir
         self._path = os.path.join(out_dir, "progress.jsonl")
-        self._interval = interval
-        self._run_id = run_id or f"run-{os.getpid()}-{int(time.time())}"
+        self._run_id = f"run-{os.getpid()}-{int(time.time())}"
         self._stage = "-"
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
@@ -89,12 +83,6 @@ class ProgressReporter:
         if self._thread is not None:
             self._thread.join(timeout=10)
 
-    def __enter__(self) -> "ProgressReporter":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
-
     # ------------------------------------------------------------- sampling
 
     def _loop(self) -> None:
@@ -109,7 +97,7 @@ class ProgressReporter:
                 for row in self._sample():
                     f.write(json.dumps(row) + "\n")
                 f.flush()
-                self._stop.wait(self._interval)
+                self._stop.wait(_INTERVAL_S)
 
     def _sample(self) -> list[dict]:
         rows: list[dict] = []

@@ -46,17 +46,10 @@ def get_spark(
     master = f"local[{cores}]"
     n = (os.cpu_count() or 8) if cores == "*" else int(cores)
     if shuffle_partitions is None:
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE")
-        if env_sp:
-            # pinned (scaling comparisons MUST hold the logical plan
-            # constant across parallelism arms — on a real cluster the
-            # shuffle-partition conf stays fixed while executors scale)
-            shuffle_partitions = int(env_sp)
-        else:
-            # 2x cores: enough tasks for AQE to coalesce, not so many that
-            # task overhead dominates at local scale. On a real cluster this
-            # scales with executors*cores (set via spark-submit conf).
-            shuffle_partitions = max(2 * n, 8)
+        # 2x cores: enough tasks for AQE to coalesce, not so many that
+        # task overhead dominates at local scale. On a real cluster this
+        # scales with executors*cores (set via spark-submit conf).
+        shuffle_partitions = max(2 * n, 8)
 
     builder = (
         SparkSession.builder.master(master)
@@ -103,9 +96,9 @@ def get_spark(
     return spark
 
 
-def ensure_parallelism(df, multiplier: int = 2):
+def ensure_parallelism(df):
     """Repartition a DataFrame that feeds a compute-heavy (UDF) stage to
-    cores × multiplier, but only when the input is actually starved of
+    2 × cores, but only when the input is actually starved of
     partitions — decided by PLAN INSPECTION only, never by running a
     job. AQE coalesces shuffles by *compressed shuffle bytes*, which
     under-parallelizes stages whose per-row cost is much higher than
@@ -148,4 +141,4 @@ def ensure_parallelism(df, multiplier: int = 2):
         return df
     if len(df.inputFiles()) >= target:
         return df
-    return df.repartition(target * multiplier)
+    return df.repartition(target * 2)

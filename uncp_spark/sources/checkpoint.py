@@ -106,7 +106,6 @@ def write_checkpoint(
     name: str,
     config_hash: str,
     input_token: str,
-    extra: dict | None = None,
 ) -> StageResult:
     """Write df as the stage's Parquet output + manifest. Atomicity: the
     manifest (with complete=true) is written only after the Parquet
@@ -158,7 +157,6 @@ def write_checkpoint(
         # downstream checkpoints through the token chain
         "nonce": uuid.uuid4().hex,
         **({"partition_metrics_error": metrics_error} if metrics_error else {}),
-        **(extra or {}),
     }
     tmp = _manifest_path(path) + ".tmp"
     with open(tmp, "w") as f:
