@@ -226,9 +226,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
 
 def q_cc_bruteforce(spark, sf_dir):
-    """F8/north_rule clustering oracle: distributed connected components
-    (components.py: union-find on Arrow batches in one task, alternating
-    large-star/small-star rounds when the edges outgrow one task) over the
+    """F8/north_rule clustering oracle: connected components
+    (components.py: union-find on Arrow batches in one task) over the
     exact Jaccard ≥ 0.8 pair set, labels = min doc_id per component. The
     DuckDB oracle computes the identical components with a recursive
     transitive-closure CTE — a fully independent algorithm — so a green
@@ -450,7 +449,10 @@ files AS (
 # edges = exact shingle-Jaccard >= 0.7 OR shingle-containment >= 0.9
 # over distinct contents (provably equal to the pipeline's accepted set
 # on this corpus — see q_near_dup_clusters), clustered by a recursive
-# transitive-closure CTE, re-keyed by min repo|path member.
+# transitive-closure CTE, re-keyed by min repo|path member. `near` and
+# `comp` are MATERIALIZED: DuckDB otherwise inlines a CTE at each
+# reference and runs the all-pairs join again inside every recursive
+# step (the cc_bruteforce oracle's `pairs` likewise).
 #
 # Sub-5-token files mirror the engine's char-9-gram fallback
 # (operators/shingle.py:47-51) instead of being excluded, so the edge-set
@@ -482,7 +484,7 @@ sh AS (
                        AS nt
               FROM (SELECT DISTINCT content FROM files)))
 ),
-near AS (
+near AS MATERIALIZED (
   SELECT a.sha AS sa, b.sha AS sb
   FROM sh a JOIN sh b ON a.sha < b.sha
   WHERE len(list_intersect(a.s, b.s))::DOUBLE /
@@ -497,7 +499,9 @@ reach(src, dst) AS (
   UNION
   SELECT r.src, e.b FROM reach r JOIN eds e ON r.dst = e.a
 ),
-comp AS (SELECT src AS sha, min(dst) AS comp_sha FROM reach GROUP BY src),
+comp AS MATERIALIZED (
+  SELECT src AS sha, min(dst) AS comp_sha FROM reach GROUP BY src
+),
 memb AS (
   SELECT f.repo, f.path, f.size, f.depth, c.comp_sha,
          concat(f.repo, '|', f.path) AS fk
@@ -596,7 +600,7 @@ def oracle_sql() -> dict[str, str]:
                        lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '
                      )) AS t
               FROM documents
-            ), pairs AS (
+            ), pairs AS MATERIALIZED (
               SELECT a.doc_id AS id_a, b.doc_id AS id_b
               FROM toks a JOIN toks b ON a.doc_id < b.doc_id
               WHERE round(

@@ -1,7 +1,6 @@
-"""Connected components vs a union-find oracle (SURVEY.md §5 test plan d),
-on both paths: the one-task union-find (edge frames whose plan size
-estimate fits ``spark.sql.files.maxPartitionBytes``) and the
-large-star/small-star rounds (forced by lowering that conf)."""
+"""Connected components vs a union-find oracle (SURVEY.md §5 test plan d):
+the one-task union-find, for edge frames inside and above
+``spark.sql.files.maxPartitionBytes`` alike."""
 
 from __future__ import annotations
 
@@ -52,24 +51,24 @@ def _random_edges(seed, n_nodes, n_edges, ids=int):
     return [(ids(a), ids(b)) for a, b in edges if a != b]
 
 
-def _frame(spark, tmp_path, edges, partitions=None):
-    """The edges as a parquet-backed frame (its plan has a size
-    estimate, as the pipeline's edges checkpoint does)."""
+def _frame(spark, tmp_path, edges, files=1):
+    """The edges as a parquet-backed frame of ``files`` files (its plan
+    has a size estimate, as the pipeline's edges checkpoint does)."""
     dtype = "string" if isinstance(edges[0][0], str) else "long"
     path = str(tmp_path / f"edges_{next(_frames)}")
-    spark.createDataFrame(edges, f"src {dtype}, dst {dtype}").coalesce(1).write.parquet(path)
-    df = spark.read.parquet(path)
-    return df.repartition(partitions) if partitions else df
+    df = spark.createDataFrame(edges, f"src {dtype}, dst {dtype}")
+    df.repartition(files).write.parquet(path)
+    return spark.read.parquet(path)
 
 
-def _labels(df, **kw):
-    return {r["file_id"]: r["cluster_id"] for r in connected_components(df, **kw).collect()}
+def _labels(df):
+    return {r["file_id"]: r["cluster_id"] for r in connected_components(df).collect()}
 
 
 @pytest.fixture()
-def star_path(spark):
-    """Lower maxPartitionBytes so every test frame takes the star-round
-    path; the conf is restored afterwards."""
+def above_split(spark):
+    """Lower maxPartitionBytes so every test frame's plan size estimate
+    exceeds one split; the conf is restored afterwards."""
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
     spark.conf.set(key, "256")
@@ -83,10 +82,7 @@ _GRAPHS = [(1, 20, 15), (2, 50, 40), (3, 80, 120)]
 
 
 def _check_one_task(spark, tmp_path, edges):
-    df = _frame(spark, tmp_path, edges)
-    assert cc._fits_one_task(df)
-    assert _labels(df) == _oracle(edges)
-    assert cc.LAST_RUN_STATS == {"rounds": 0, "probes": 0}
+    assert _labels(_frame(spark, tmp_path, edges)) == _oracle(edges)
 
 
 @pytest.mark.parametrize("seed,n_nodes,n_edges", _GRAPHS)
@@ -126,15 +122,6 @@ def test_union_find_kernel_matches_oracle(monkeypatch, fold_rows):
         assert got == _oracle(edges)
 
 
-@pytest.mark.parametrize("ids", [int, _hex], ids=["long", "hex"])
-def test_cc_star_path_random_graph(spark, tmp_path, star_path, ids):
-    edges = _random_edges(4, 200, 260, ids)
-    df = _frame(spark, tmp_path, edges, partitions=8)
-    assert not cc._fits_one_task(df)
-    assert _labels(df) == _oracle(edges)
-    assert cc.LAST_RUN_STATS["rounds"] >= 1
-
-
 def test_cc_long_chain(spark, tmp_path):
     """High-diameter graph — the case naive propagation needs O(n)
     rounds for — solved by the one-task union-find."""
@@ -144,65 +131,40 @@ def test_cc_long_chain(spark, tmp_path):
     assert len(got) == n + 1
 
 
-def test_cc_star_path_long_chain(spark, tmp_path, star_path):
-    """Star alternation must converge on the chain within max_iter, and
-    the reliable (parquet) cut must give the same labels."""
-    edges = [(i, i + 1) for i in range(300)]
-    df = _frame(spark, tmp_path, edges, partitions=8)
-    assert _labels(df) == _oracle(edges)
-    ckpt = str(tmp_path / "cc_ckpt")
-    assert _labels(df, checkpoint_dir=ckpt) == _oracle(edges)
+def _one_job_labels(spark, df) -> dict:
+    """Labels of ``df``, asserting they took exactly one Spark job."""
+    sc, group = spark.sparkContext, f"cc-one-task-{next(_frames)}"
+    sc.setJobGroup(group, "one-task components probe")
+    try:
+        got = _labels(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    return got
 
 
 def test_cc_small_path_runs_one_job(spark, tmp_path):
-    df = _frame(spark, tmp_path, _random_edges(5, 60, 80, _hex))
-    sc = spark.sparkContext
-    sc.setJobGroup("cc-one-task", "one-task components probe")
-    try:
-        connected_components(df).collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup("cc-one-task")) == 1
+    edges = _random_edges(5, 60, 80, _hex)
+    assert _one_job_labels(spark, _frame(spark, tmp_path, edges)) == _oracle(edges)
+
+
+@pytest.mark.parametrize("ids", [int, _hex], ids=["long", "hex"])
+def test_cc_above_split_runs_one_job(spark, tmp_path, above_split, ids):
+    """An 8-partition frame whose size estimate exceeds one split is
+    still solved by the one-task kernel, in one Spark job."""
+    edges = _random_edges(4, 200, 260, ids)
+    df = _frame(spark, tmp_path, edges, files=8)
+    assert df.rdd.getNumPartitions() >= 8
+    jconf = spark._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(size) > int(jconf.filesMaxPartitionBytes())
+    assert _one_job_labels(spark, df) == _oracle(edges)
 
 
 def test_cc_deterministic_cluster_ids(spark, tmp_path):
     edges = [(5, 9), (9, 2), (30, 40), (7, 7), (2, 5)]
     got = _labels(_frame(spark, tmp_path, edges))
     assert got == {2: 2, 5: 2, 9: 2, 30: 30, 40: 30}
-
-
-def test_cc_probe_cadence_shallow_graph(spark, tmp_path, star_path):
-    """A graph already in star form hits its fixpoint in round 1 and the
-    probe-every-round cadence detects that at round 2 (c2 == c1; local
-    mode skips the input-checksum barrier, so the baseline for a
-    round-1 no-op does not exist) — no stacked EXTRA full-edge-set star
-    round runs past this point on this shape."""
-    edges = [(0, i) for i in range(1, 7)]
-    assert _labels(_frame(spark, tmp_path, edges)) == _oracle(edges)
-    assert cc.LAST_RUN_STATS == {"rounds": 2, "probes": 2}
-
-
-def test_cc_probe_cadence_deep_graph_stacks(spark, tmp_path, star_path):
-    """Past round 3 the graph has proven deep; rounds are stacked two
-    per barrier, so probes < rounds — the latency win stacking exists
-    for — while every round stays convergence-checked."""
-    df = _frame(spark, tmp_path, [(i, i + 1) for i in range(300)])
-    assert set(_labels(df).values()) == {0}
-    stats = cc.LAST_RUN_STATS
-    assert stats["rounds"] > 3
-    # 3 single-round probes, then 2 rounds per probe
-    assert stats["probes"] == 3 + (stats["rounds"] - 3 + 1) // 2
-
-
-def test_cc_stats_describe_a_failed_call(spark, tmp_path, star_path):
-    """A call that does not converge still reports its own rounds and
-    probes, not the previous call's."""
-    _labels(_frame(spark, tmp_path, [(0, 1), (0, 2)]))
-    assert cc.LAST_RUN_STATS["rounds"] == 2
-    df = _frame(spark, tmp_path, [(i, i + 1) for i in range(300)])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=1)
-    assert cc.LAST_RUN_STATS == {"rounds": 1, "probes": 1}
 
 
 def test_label_all_singletons(spark, tmp_path):

@@ -17,8 +17,7 @@ Pipeline (SURVEY.md §7.1):
       → LSH banding self-join → candidate pairs [skew-capped hot buckets]
         ∪ bottom-k sketch containment index
       → verify (est. Jaccard / Hamming / containment) → edges
-      → connected components (union-find in one task; large-star/
-        small-star rounds when the edges outgrow one task) → clusters
+      → connected components (union-find in one task) → clusters
       → priority scores (bytes reclaimable, dup count, path depth)
 
 Containment is found one way: the bottom-k sketch index proposes the

@@ -38,7 +38,7 @@ from uncp_spark.sources import checkpoint as ckpt
 
 # everything a pipeline run / incremental update may leave under
 # base_dir besides the STAGES themselves
-_AUX_DIRS = ["hot_buckets", "hot_shingles", "_cc_checkpoints", "_metrics", STAGING]
+_AUX_DIRS = ["hot_buckets", "hot_shingles", "_metrics", STAGING]
 _AUX_FILES = ["_run.json"]
 
 

@@ -113,10 +113,7 @@ class DedupPipeline:
             return near.select(*cols).unionByName(exact.select(*cols))
 
         def build_labels(spark, ctx):
-            return connected_components(
-                ctx["edges"].select("src", "dst"),
-                checkpoint_dir=os.path.join(self.base_dir, "_cc_checkpoints"),
-            )
+            return connected_components(ctx["edges"].select("src", "dst"))
 
         def build_clusters(spark, ctx):
             return priority_ranked(
